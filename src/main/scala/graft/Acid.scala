@@ -182,20 +182,35 @@ object Acid {
       allDeltas.map(d => (d.min, d.max)))
       .map { case (lo, hi) => (lo, math.min(hi, asOf)) }
       .filter { case (lo, hi) => lo <= hi }
-    val covered = (if (floor > 0) Seq((1L, floor)) else Seq.empty) ++
-      selected.map(d => (d.min, d.max))
+    val covered = intervalUnion(
+      (if (floor > 0) Seq((1L, floor)) else Seq.empty) ++
+        selected.map(d => (d.min, d.max)))
     existing.foreach { case (lo, hi) =>
-      var id = lo
-      while (id <= hi) {
-        require(covered.exists { case (a, b) => a <= id && id <= b },
-          s"write id $id at $path is not readable as of $asOf: its " +
-            "events survive only inside a compacted directory " +
-            "(history below the horizon was cleaned)")
-        id += 1
-      }
+      val hole = firstUncovered(covered, lo, hi)
+      require(hole.isEmpty,
+        s"write id ${hole.get} at $path is not readable as of $asOf: its " +
+          "events survive only inside a compacted directory " +
+          "(history below the horizon was cleaned)")
     }
     State(base, selected.toSeq, originals)
   }
+
+  /** Sorted, disjoint, non-adjacent union of closed write-id ranges. */
+  private def intervalUnion(ranges: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    ranges.sorted.foldLeft(List.empty[(Long, Long)]) {
+      case ((a, b) :: rest, (lo, hi)) if lo <= b + 1 =>
+        (a, math.max(b, hi)) :: rest
+      case (acc, r) => r :: acc
+    }.reverse
+
+  /** Lowest id in [lo, hi] outside `union` (an `intervalUnion` result):
+    * O(ranges), independent of how many ids the ranges span. */
+  private def firstUncovered(union: Seq[(Long, Long)], lo: Long,
+      hi: Long): Option[Long] =
+    union.find { case (_, b) => b >= lo } match {
+      case Some((a, b)) if a <= lo => if (b >= hi) None else Some(b + 1)
+      case _                       => Some(lo)
+    }
 
   // ---- partitioned layout (Hive: each partition dir holds its own
   // base/delta tree; write ids are table-global) ----
@@ -612,13 +627,58 @@ object Acid {
       col("row.*")) ++
       partCols.map(col): _*)
 
+  /** Key under which Spark's parquet writer stores the row schema as JSON
+    * in each file's footer (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark's writer stored in the footer of the dir's first
+    * data file — with mergeSchema off, exactly the one footer Spark's own
+    * inference reads, so the result is the same. Read on the driver like
+    * the reference's `OrcRawRecordMerger`, which opens each base/delta
+    * with its own footer schema. None when the dir holds no data file or
+    * its writer was not Spark. */
+  private def storedSchema(spark: SparkSession, dir: File)
+      : Option[StructType] =
+    Option(dir.listFiles()).getOrElse(Array.empty[File])
+      .filter(originalFile).sortBy(_.getName).headOption.flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toURI),
+            spark.sparkContext.hadoopConfiguration))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(SparkSchemaKey))
+        finally reader.close()
+      }.flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+
+  /** The one way to read published base/delta dirs: one scan per
+    * distinct footer schema, joined by name (`unionByName` widens
+    * differing column types). Passing the stored schema skips Spark's
+    * schema-inference job, so building a snapshot launches no job; a
+    * dir's schema is applied only to dirs that stored the same one. Dirs
+    * without Spark's key (another writer, or no data file) fall back to
+    * inference, one dir at a time. `root` is the partition-discovery
+    * base, so partition columns come from the path. */
+  private def readPublished(spark: SparkSession, root: String,
+      dirs: Seq[File]): Option[DataFrame] = {
+    def reader = spark.read.option("basePath", root)
+    val tagged = dirs.map(d => storedSchema(spark, d) -> d.toString)
+    tagged.map(_._1).distinct.flatMap {
+      case Some(s) =>
+        Seq(reader.schema(s).parquet(
+          tagged.collect { case (Some(`s`), d) => d }: _*))
+      case None => tagged.collect { case (None, d) => reader.parquet(d) }
+    }.reduceOption(_ unionByName _)
+  }
+
   /** Current committed snapshot with the ROW__ID virtual column exposed
     * (originalTransaction, bucket, rowId) — the reference's ROW__ID.
-    * Partitioned tables read as batched scans (every selected base dir,
-    * every selected delta dir, every original file) with
+    * Selected dirs read as batched scans (`readPublished`: every selected
+    * base dir, every selected delta dir; plus every original file) with
     * directory-derived partition columns — plan size is constant in
-    * partition count, and Catalyst prunes partitions on the inferred
-    * columns. */
+    * delta and partition count, Catalyst prunes partitions on the
+    * inferred columns, and building the snapshot launches no job unless
+    * pre-ACID originals are present. */
   def snapshotWithRowId(spark: SparkSession, path: String): DataFrame =
     snapshotWithRowIdAsOf(spark, path, Long.MaxValue)
 
@@ -631,10 +691,9 @@ object Acid {
       asOf: Long): DataFrame =
     if (!isPartitioned(path)) {
       val s = stateAsOf(path, asOf)
-      val deltas = s.deltas.map(d => spark.read.parquet(d.dir.toString))
-      val baseEvents = s.base.map { case (_, dir) =>
-        baseAsEvents(spark.read.parquet(dir.toString), Nil)
-      }
+      val deltas = readPublished(spark, path, s.deltas.map(_.dir))
+      val baseEvents = readPublished(spark, path, s.base.map(_._2).toSeq)
+        .map(baseAsEvents(_, Nil))
       val originalEvents =
         if (s.originals.isEmpty) None
         else Some(originalsAsEvents(spark, path, s.originals, Nil))
@@ -650,12 +709,9 @@ object Acid {
       // partitions with deltas pay the merge; delta-free partitions
       // (base-only or originals-only) bypass it entirely
       val (dirty, cleanLeaves) = perLeaf.partition(_.deltas.nonEmpty)
-      def read(dirs: Seq[String]): Option[DataFrame] =
-        if (dirs.isEmpty) None
-        else Some(spark.read.option("basePath", path).parquet(dirs: _*))
       def eventsOf(leaves: Seq[State]): Seq[DataFrame] =
-        read(leaves.flatMap(_.deltas.map(_.dir.toString))).toSeq ++
-          read(leaves.flatMap(_.base.map(_._2.toString)))
+        readPublished(spark, path, leaves.flatMap(_.deltas.map(_.dir))).toSeq ++
+          readPublished(spark, path, leaves.flatMap(_.base.map(_._2)))
             .map(baseAsEvents(_, partCols)) ++ {
           val orig = leaves.flatMap(_.originals)
           if (orig.isEmpty) None
@@ -1155,8 +1211,7 @@ object Acid {
     }
     val s = state(path)
     if (s.deltas.size > 1) {
-      val merged = s.deltas.map(d => spark.read.parquet(d.dir.toString))
-        .reduce(_ unionByName _)
+      val merged = readPublished(spark, path, s.deltas.map(_.dir)).get
       writeDir(merged, path,
         deltaName(s.deltas.map(_.min).min, s.deltas.map(_.max).max),
         marker = maxMarker(s.deltas.map(_.dir)))

@@ -511,6 +511,153 @@ class AcidSpec extends SparkSpec {
     assert(rows(Acid.snapshot(spark, t)) == rows(seed(10)))
   }
 
+  /** Spark jobs `f` launches on this thread's job group, counted after
+    * the listener bus has delivered every event. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"acid-spec-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+          _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    org.apache.spark.SpecBridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "counted")
+    try {
+      f
+      org.apache.spark.SpecBridge.drainListeners(sc)
+      n.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("building a snapshot over base + deltas launches no Spark job") {
+    val t = tmpTable()
+    Acid.create(t)
+    Acid.insertTxn(spark, t, seed(40))
+    Acid.compactMajor(spark, t)
+    Acid.clean(t)
+    Acid.updateTxn(spark, t, Map("v" -> "v + 1"), "k < 5")
+    Acid.deleteTxn(spark, t, "k >= 35")
+    Acid.insertTxn(spark, t, seed(45).filter($"k" >= 40))
+    assert(dirs(t) == Seq("base_0000001", "delta_0000002_0000002",
+      "delta_0000003_0000003", "delta_0000004_0000004"))
+    var snap: DataFrame = null
+    assert(jobsOf { snap = Acid.snapshot(spark, t) } == 0)
+    assert(rows(snap) == rows(seed(45)
+      .withColumn("v", when($"k" < 5, $"v" + 1).otherwise($"v"))
+      .filter($"k" < 35 || $"k" >= 40)))
+
+    // partitioned: deltas in two leaves, a base in one of them
+    val p = tmpTable()
+    Acid.create(p)
+    val byPart = seed(20).withColumn("p", ($"k" % 2).cast("string"))
+    Acid.insertTxn(spark, p, byPart, Seq("p"))
+    Acid.compactMajor(spark, s"$p/p=0")
+    Acid.clean(p)
+    Acid.updateTxn(spark, p, Map("v" -> "0.0"), "k < 6")
+    Acid.deleteTxn(spark, p, "k = 7")
+    assert(dirs(s"$p/p=0") == Seq("base_0000001", "delta_0000002_0000002"))
+    assert(dirs(s"$p/p=1").count(_.startsWith("delta_")) == 3)
+    assert(jobsOf { snap = Acid.snapshot(spark, p) } == 0)
+    assert(snap.select("k", "s", "v", "p")
+      .as[(Long, String, Double, String)].collect().toSet ==
+      byPart.withColumn("v", when($"k" < 6, 0.0).otherwise($"v"))
+        .filter($"k" =!= 7).select("k", "s", "v", "p")
+        .as[(Long, String, Double, String)].collect().toSet)
+
+    // a front-door UPDATE costs the same jobs at 1 active delta as at 4
+    val u = tmpTable()
+    Acid.create(u)
+    Acid.insertTxn(spark, u, seed(10))
+    Acid.register(spark, "acid_jobs_t", u)
+    val update = "UPDATE acid_jobs_t SET v = v + 1 WHERE k = 3"
+    val atOne = jobsOf { GraftSession.sql(spark, update) }
+    Acid.insertTxn(spark, u, seed(12).filter($"k" >= 10))
+    Acid.insertTxn(spark, u, seed(14).filter($"k" >= 12))
+    assert(dirs(u).count(_.startsWith("delta_")) == 4)
+    assert(jobsOf { GraftSession.sql(spark, update) } == atOne)
+    assert(spark.table("acid_jobs_t").filter($"k" === 3)
+      .select("v").as[Double].head() == 6.5)
+    Acid.deregister(spark, "acid_jobs_t")
+  }
+
+  test("deltas with different stored column types widen as per-dir " +
+    "reads do") {
+    // reference: each published dir read alone with its own inferred
+    // schema, unioned by name, last event per identity wins
+    def perDirSnapshot(t: String): DataFrame =
+      dirs(t).filter(_.startsWith("delta_"))
+        .map(d => spark.read.parquet(s"$t/$d"))
+        .reduce(_ unionByName _)
+        .groupBy("originalTransaction", "bucket", "rowId")
+        .agg(max_by(struct($"operation", $"row"), $"currentTransaction")
+          .as("last"))
+        .filter($"last.operation" =!= Acid.DeleteOp)
+        .select("last.row.*")
+    val asInt = seed(20).filter($"k" >= 10).withColumn("k", $"k".cast("int"))
+    // bigint deltas then an int one, and the reverse order
+    Seq(Seq(seed(10), asInt), Seq(asInt, seed(10))).foreach { inserts =>
+      val t = tmpTable()
+      Acid.create(t)
+      inserts.foreach(df => Acid.insertTxn(spark, t, df))
+      Acid.updateTxn(spark, t, Map("v" -> "v * 2"), "k % 4 = 1")
+      val got = Acid.snapshot(spark, t)
+      val want = perDirSnapshot(t)
+      assert(got.schema.map(f => f.name -> f.dataType) ==
+        want.schema.map(f => f.name -> f.dataType))
+      assert(got.schema("k").dataType == org.apache.spark.sql.types.LongType)
+      assert(rows(got) == rows(want))
+      assert(rows(got) == rows(seed(20)
+        .withColumn("v", when($"k" % 4 === 1, $"v" * 2).otherwise($"v"))))
+    }
+  }
+
+  test("census coverage check is independent of the write-id span") {
+    val t = tmpTable()
+    Acid.create(t)
+    Acid.insertTxn(spark, t, seed(10))                          // w1
+    // a long-lived table: the next write id is near 10^7
+    java.nio.file.Files.write(new File(t, "_write_id_hwm").toPath,
+      "9999990".getBytes("UTF-8"))
+    assert(Acid.insertTxn(spark, t, seed(12).filter($"k" >= 10)) ==
+      9999991L)
+    Acid.compactMajor(spark, t)
+    Acid.clean(t)
+    assert(dirs(t) == Seq("base_9999991"))
+    // the same layout at write id 2 is the yardstick: a walk over every
+    // write id costs ~10^7 probes per census here, an interval check ~1
+    val small = tmpTable()
+    Acid.create(small)
+    Acid.insertTxn(spark, small, seed(10))
+    Acid.insertTxn(spark, small, seed(12).filter($"k" >= 10))
+    Acid.compactMajor(spark, small)
+    Acid.clean(small)
+    assert(dirs(small) == Seq("base_0000002"))
+    def censusMs(path: String): Double = {
+      (1 to 20).foreach(_ => Acid.state(path)) // warm
+      val t0 = System.nanoTime()
+      (1 to 200).foreach(_ => Acid.state(path))
+      (System.nanoTime() - t0) / 1e6
+    }
+    val (bigMs, smallMs) = (censusMs(t), censusMs(small))
+    assert(bigMs < 4 * smallMs + 250,
+      s"200 censuses: $bigMs ms over base_9999991, " +
+        s"$smallMs ms over base_0000002")
+    assert(rows(Acid.snapshot(spark, t)) == rows(seed(12)))
+    // the base straddles this horizon and w1's own delta is cleaned
+    val e = intercept[IllegalArgumentException] {
+      Acid.snapshotAsOf(spark, t, 5000000L)
+    }
+    assert(e.getMessage.contains(
+      "write id 1 at " + t + " is not readable as of 5000000"))
+  }
+
   test("Acid lifecycle ≡ in-memory model under random txns + compaction") {
     val rnd = new scala.util.Random(42)
     (0 until 2).foreach { trial =>

@@ -101,6 +101,10 @@ for path in glob.glob(os.path.join(
 for doc in ("README.md", "COVERAGE.md", "SURVEY.md"):
     check(doc, r"\((\d+) of \d+ hash-checked", len(oracled), "oracle-checked")
     check(doc, r"\(\d+ of (\d+) hash-checked", len(names), "query total")
+    check(doc, r"(\d+) queries, \d+ DuckDB-oracle-checked", len(names),
+          "query total")
+    check(doc, r"\d+ queries, (\d+) DuckDB-oracle-checked", len(oracled),
+          "oracle-checked")
     check(doc, r"\((\d+) test registrations\)", test_regs,
           "test registration count")
 print(f"test registrations: {test_regs}")
