@@ -966,8 +966,7 @@ object Acid {
     // action (and a nondeterministic source could pass the check yet
     // write different events)
     val joined = t.join(s, expr(on), "inner")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    WorkingSet.using(joined) {
       // key on (partition, row__id): identities of adopted originals are
       // unique per partition, not table-wide
       val dup = joined.groupBy(col(s"$targetAlias.row__id") +:
@@ -1031,7 +1030,7 @@ object Acid {
       val events = (matchedEvents ++ insertEvents).reduce(_ unionByName _)
       publishEvents(events, path, partCols, deltaName(w, w), marker)
       w
-    } finally { joined.unpersist(); () }
+    }
   }
   }
 

@@ -115,10 +115,12 @@ object AnalyticsQueries {
       WHERE n_shared::DOUBLE / s.n >= 0.8""") { (s, d) =>
       val docs = Tables.load(s, d, "documents")
       val toks = TextOps.tokens(col("text"))
-      val quotes = docs
-        .filter(pmod(col("doc_id"), lit(40)) === 0 && size(toks) >= 30)
+      // tokenize bound once (the operators' lambda idiom): an aliased
+      // size filter would be inlined and split every quoted doc twice
+      val quotes = docs.filter(pmod(col("doc_id"), lit(40)) === 0)
         .select((col("doc_id") + 100000L).as("id"),
-          concat_ws(" ", slice(toks, 1, 30)).as("text"))
+          explode(filter(array(toks), t => size(t) >= 30)).as("t"))
+        .select(col("id"), concat_ws(" ", slice(col("t"), 1, 30)).as("text"))
       val corpus = docs.select(col("doc_id").as("id"), col("text"))
         .unionByName(quotes)
       Dedup.containmentPairs(corpus, "id", "text",
@@ -590,12 +592,11 @@ object AnalyticsQueries {
       // checkpointed once: cr feeds the sketch path, the exact-median
       // rank selection, AND the tolerance count — three consumers, one
       // customer scan
-      val cr = Tables.load(s, d, "customer")
+      val cr = WorkingSet.pin(Tables.load(s, d, "customer")
         .join(broadcast(Tables.load(s, d, "nation")),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("n_regionkey").as("region"), col("c_nationkey"),
-          col("c_acctbal"))
-        .localCheckpoint(true)
+          col("c_acctbal")))
       val est = cr.groupBy("region", "c_nationkey")
         .agg(expr("kll_sketch_agg_double(c_acctbal, 200)").as("sk"))
         .groupBy("region")

@@ -493,6 +493,7 @@ object GapQueries {
           .select("id").collect().map(_.getLong(0)).toSet
         exact.intersect(approx).size
       }.sum
+      Seq(ivf.assigned, ivf.centroids).foreach(WorkingSet.release)
       Seq((hits >= 25, 10)) // mean recall ≥ 0.5 over 50 slots
         .toDF("recall_ok", "k")
     },
@@ -508,10 +509,12 @@ object GapQueries {
       val pairs = Dedup.minhashNearDups(
         plantCopy(Tables.load(s, d, "documents"), "doc_id", "text"),
         "doc_id", "text")
-      Seq((
+      val found = Seq((
         pairs.filter(plantedPair).count() == 1L,
         pairs.filter(col("id_a") >= col("id_b")).count() == 0L
       )).toDF("found_planted", "no_self_pairs")
+      WorkingSet.release(pairs)
+      found
     },
 
     dfQ("q127_simhash_planted", """

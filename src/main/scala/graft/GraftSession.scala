@@ -1413,12 +1413,11 @@ object GraftSession {
           try runInserts(name) finally spark.catalog.uncacheTable(name)
         } else {
           val df = spark.sql(s"SELECT * FROM $fromPart")
-          df.persist()
-          try {
+          WorkingSet.using(df) {
             df.createOrReplaceTempView(name)
             try runInserts(name)
             finally spark.catalog.dropTempView(name)
-          } finally df.unpersist()
+          }
         }
       case None => runInserts(fromPart) // multi-table join source: re-scan
     }

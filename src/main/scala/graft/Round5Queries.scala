@@ -91,8 +91,8 @@ object Round5Queries {
         Acid.compactMajor(s, t)
         Acid.clean(t)
         Acid.deleteTxn(s, t, "o_orderkey % 5 = 0")
-        // eager checkpoint: the frame must outlive the table directory
-        Acid.snapshot(s, t).orderBy("o_orderkey").localCheckpoint()
+        // pinned: the frame must outlive the table directory
+        WorkingSet.pin(Acid.snapshot(s, t).orderBy("o_orderkey"))
       } finally {
         import scala.reflect.io.Directory
         new Directory(new java.io.File(t)).deleteRecursively()
@@ -133,9 +133,9 @@ object Round5Queries {
         Acid.clean(t)
         Acid.deleteTxn(s, t, "o_orderkey % 7 = 0")
         Acid.insertTxn(s, t, orders.filter(col("o_orderkey") % 4 === 3))
-        Acid.snapshot(s, t)
+        WorkingSet.pin(Acid.snapshot(s, t)
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-          .orderBy("o_orderkey").localCheckpoint()
+          .orderBy("o_orderkey"))
       } finally {
         import scala.reflect.io.Directory
         new Directory(new java.io.File(t)).deleteRecursively()
@@ -191,9 +191,9 @@ object Round5Queries {
               "o_totalprice" -> "s.o_totalprice * 2"))),
           notMatched = Some(Warehouse.NotMatchedInsert(None, Seq(
             "s.o_orderkey", "s.o_custkey", "'N'", "s.o_totalprice"))))
-        Acid.snapshot(s, t)
+        WorkingSet.pin(Acid.snapshot(s, t)
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-          .orderBy("o_orderkey").localCheckpoint()
+          .orderBy("o_orderkey"))
       } finally {
         import scala.reflect.io.Directory
         new Directory(new java.io.File(t)).deleteRecursively()
@@ -520,13 +520,13 @@ object Round5Queries {
         Acid.updateTxn(s, t,
           Map("o_totalprice" -> "o_totalprice * 3"), "o_custkey % 2 = 0")
         Acid.deleteTxn(s, t, "o_orderkey % 7 = 1")
-        (1 to 3).map(w =>
+        // pinned: the frame must outlive the table directory
+        WorkingSet.pin((1 to 3).map(w =>
             Acid.snapshotAsOf(s, t, w).withColumn("as_of", lit(w)))
           .reduce(_ unionByName _)
           .select(col("as_of"), col("o_orderkey"), col("o_custkey"),
             col("o_totalprice"))
-          .orderBy("as_of", "o_orderkey")
-          .localCheckpoint() // must outlive the table directory
+          .orderBy("as_of", "o_orderkey"))
       } finally {
         import scala.reflect.io.Directory
         new Directory(new java.io.File(t)).deleteRecursively()
@@ -651,10 +651,11 @@ object Round5Queries {
     //    keep their centroid) is replayed as chained CTEs — the
     //    pagerank/bpe unrolling discipline applied to clustering.
     dfQ("q221_kmeans", duckKmeansOracle(4, 2)) { (s, d) =>
-      graft.operators.Clustering.kmeans(
+      val model = graft.operators.Clustering.kmeans(
         Tables.load(s, d, "embeddings"), "vec_id", "embedding",
         k = 4, iters = 2, seeding = graft.operators.Clustering.seedFirstK)
-        .assigned.select(col("id"), col("cid")).orderBy("id")
+      WorkingSet.release(model.centroids) // the query keeps assignments only
+      model.assigned.select(col("id"), col("cid")).orderBy("id")
     },
 
     // -- product-quantization ANN invariant (the q125 pattern): the
@@ -693,6 +694,7 @@ object Round5Queries {
         .filter(size(col("codes")) =!= 8 ||
           exists(col("codes"), c => c < 0 || c >= 16))
         .count() == 0L
+      Seq(model.codes, model.codebooks).foreach(WorkingSet.release)
       Seq((recalls.map(_._2).sum >= 40, // mean rerank recall ≥ 0.8
         recalls.map(_._1).sum >= 10,    // mean raw-ADC recall ≥ 0.2
         codesOk, 8))

@@ -138,10 +138,12 @@ object Round6Queries {
       val docs = Tables.load(s, d, "documents")
       val pairs = SetSim.jaccardSelfJoin(
         docs, "doc_id", "text", threshold = 0.8)
-      Dedup.dedupByClusterKeepBest(
+      val kept = Dedup.dedupByClusterKeepBest(
           docs.withColumn("__score", length(col("text"))),
           "doc_id", pairs, "id_a", "id_b", "__score")
         .select("doc_id").orderBy("doc_id")
+      WorkingSet.release(pairs) // the clusters are pinned; pairs are done
+      kept
     },
 
     // -- incremental SCD2 maintenance: history built from the first half

@@ -356,12 +356,16 @@ object ScaleQueries {
         .unionByName(Seq((9000002L,
           "zyx quixotic vermillion axolotl numbat parallax grommet"))
           .toDF("doc_id", "text"))
-      val hits = Dedup.minhashAgainstIndex(newBatch, "doc_id", "text", index)
-      Seq((
+      val hits = WorkingSet.using(index.shingled, index.banded) {
+        Dedup.minhashAgainstIndex(newBatch, "doc_id", "text", index)
+      }
+      val found = Seq((
         hits.filter(col("new_id") === 9000001L && col("index_id") === 0L)
           .count() == 1L,
         hits.filter(col("new_id") === 9000002L).count() == 0L
       )).toDF("found_planted", "novel_clean")
+      WorkingSet.release(hits)
+      found
     },
 
     // -- training-mix drift: per-source KL divergence of the language

@@ -96,9 +96,9 @@ object Warehouse {
   def multiInsert(
       source: DataFrame,
       dests: Seq[(String, DataFrame => DataFrame)]): Unit = {
-    source.persist()
-    try dests.foreach { case (table, f) => insertInto(f(source), table) }
-    finally source.unpersist()
+    WorkingSet.using(source) {
+      dests.foreach { case (table, f) => insertInto(f(source), table) }
+    }
   }
 
   /** UPDATE table SET col=expr, ... WHERE cond — implemented as a
@@ -257,90 +257,88 @@ object Warehouse {
     // dominant join re-executes per action (and a nondeterministic
     // source could pass the check yet write different rows)
     val joined = t.join(s, onExpr, "inner")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val tKey = struct(tCols.map(c => col(s"$targetAlias.$c")): _*)
+    WorkingSet.using(joined) {
+      val tKey = struct(tCols.map(c => col(s"$targetAlias.$c")): _*)
 
-    // Hive cardinality check: joined-count per target-row-value exceeding
-    // the target's own duplicate count means >1 source match per row
-    val tCounts = t.groupBy(tKey.as("k")).agg(count(lit(1)).as("tn"))
-    val jCounts = joined.groupBy(tKey.as("k")).agg(count(lit(1)).as("jn"))
-    val violations = jCounts.join(tCounts, col("jn") =!= col("tn") &&
-      jCounts("k") <=> tCounts("k")).limit(1).count()
-    require(violations == 0,
-      s"MERGE cardinality violation: a row of $table matches more than " +
-        "one source row")
+      // Hive cardinality check: joined-count per target-row-value exceeding
+      // the target's own duplicate count means >1 source match per row
+      val tCounts = t.groupBy(tKey.as("k")).agg(count(lit(1)).as("tn"))
+      val jCounts = joined.groupBy(tKey.as("k")).agg(count(lit(1)).as("jn"))
+      val violations = jCounts.join(tCounts, col("jn") =!= col("tn") &&
+        jCounts("k") <=> tCounts("k")).limit(1).count()
+      require(violations == 0,
+        s"MERGE cardinality violation: a row of $table matches more than " +
+          "one source row")
 
-    // first listed WHEN MATCHED clause whose condition holds applies
-    val outcome = matched.zipWithIndex.foldRight(lit(0)) {
-      case ((cl, i), els) =>
-        val c = cl match {
-          case MatchedUpdate(cond, _) => cond
-          case MatchedDelete(cond)    => cond
-        }
-        when(c.map(expr).getOrElse(lit(true)), lit(i + 1)).otherwise(els)
-    }
-    val deleteIdx = matched.zipWithIndex.collect {
-      case (MatchedDelete(_), i) => i + 1
-    }
-    val transformed = joined
-      .withColumn("__out", outcome)
-      .filter(deleteIdx.foldLeft(lit(true))(
-        (acc, i) => acc && col("__out") =!= i))
-      .select(tCols.map { c =>
-        matched.zipWithIndex.foldLeft(col(s"$targetAlias.$c")) {
-          case (els, (MatchedUpdate(_, sets), i)) =>
-            sets.collectFirst {
-              case (sc, e) if sc.equalsIgnoreCase(c) ||
-                sc.equalsIgnoreCase(s"$targetAlias.$c") => e
-            } match {
-              case Some(e) => when(col("__out") === i + 1, expr(e))
-                .otherwise(els)
-              case None => els
-            }
-          case (els, _) => els
-        }.as(c)
-      }: _*)
-
-    val unmatchedT = t.join(s, onExpr, "left_anti")
-      .select(tCols.map(c => col(s"$targetAlias.$c").as(c)): _*)
-    val inserts = notMatched.map { ins =>
-      val base = s.join(t, onExpr, "left_anti")
-      ins.cond.map(c => base.filter(expr(c))).getOrElse(base)
-        .select(ins.values.zip(tCols).map {
-          case (e, c) => expr(e).as(c)
+      // first listed WHEN MATCHED clause whose condition holds applies
+      val outcome = matched.zipWithIndex.foldRight(lit(0)) {
+        case ((cl, i), els) =>
+          val c = cl match {
+            case MatchedUpdate(cond, _) => cond
+            case MatchedDelete(cond)    => cond
+          }
+          when(c.map(expr).getOrElse(lit(true)), lit(i + 1)).otherwise(els)
+      }
+      val deleteIdx = matched.zipWithIndex.collect {
+        case (MatchedDelete(_), i) => i + 1
+      }
+      val transformed = joined
+        .withColumn("__out", outcome)
+        .filter(deleteIdx.foldLeft(lit(true))(
+          (acc, i) => acc && col("__out") =!= i))
+        .select(tCols.map { c =>
+          matched.zipWithIndex.foldLeft(col(s"$targetAlias.$c")) {
+            case (els, (MatchedUpdate(_, sets), i)) =>
+              sets.collectFirst {
+                case (sc, e) if sc.equalsIgnoreCase(c) ||
+                  sc.equalsIgnoreCase(s"$targetAlias.$c") => e
+              } match {
+                case Some(e) => when(col("__out") === i + 1, expr(e))
+                  .otherwise(els)
+                case None => els
+              }
+            case (els, _) => els
+          }.as(c)
         }: _*)
-    }
 
-    if (partCols.isEmpty) {
-      val next = (Seq(unmatchedT, transformed) ++ inserts)
-        .map(df => df.select(tCols.map(col): _*))
-        .reduce(_.unionByName(_))
-      overwriteUnpartitioned(spark, table, next)
-    } else {
-      // rewrite only partitions holding matched target rows or inserts;
-      // untouched partitions keep their files
-      val touched = joined
-        .select(partCols.map(c => col(s"$targetAlias.$c").as(c)): _*)
-        .unionByName(inserts.map(_.select(partCols.map(col): _*))
-          .getOrElse(spark.emptyDataFrame
-            .select(partCols.map(c => lit(null).as(c)): _*).limit(0)))
-        .distinct()
-      val replacement = (Seq(
-        semiJoinOnPartitions(unmatchedT, touched, partCols),
-        transformed) ++ inserts)
-        .map(df => df.select(tCols.map(col): _*))
-        .reduce(_.unionByName(_))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val touchedRows = touched.collect()
-        val expected = replacement
-          .select(partCols.map(col): _*).distinct().collect().toSet
-        insertOverwriteDynamic(spark, table, replacement)
-        dropEmptiedPartitions(spark, table, partCols, touchedRows, expected)
-      } finally replacement.unpersist(false)
+      val unmatchedT = t.join(s, onExpr, "left_anti")
+        .select(tCols.map(c => col(s"$targetAlias.$c").as(c)): _*)
+      val inserts = notMatched.map { ins =>
+        val base = s.join(t, onExpr, "left_anti")
+        ins.cond.map(c => base.filter(expr(c))).getOrElse(base)
+          .select(ins.values.zip(tCols).map {
+            case (e, c) => expr(e).as(c)
+          }: _*)
+      }
+
+      if (partCols.isEmpty) {
+        val next = (Seq(unmatchedT, transformed) ++ inserts)
+          .map(df => df.select(tCols.map(col): _*))
+          .reduce(_.unionByName(_))
+        overwriteUnpartitioned(spark, table, next)
+      } else {
+        // rewrite only partitions holding matched target rows or inserts;
+        // untouched partitions keep their files
+        val touched = joined
+          .select(partCols.map(c => col(s"$targetAlias.$c").as(c)): _*)
+          .unionByName(inserts.map(_.select(partCols.map(col): _*))
+            .getOrElse(spark.emptyDataFrame
+              .select(partCols.map(c => lit(null).as(c)): _*).limit(0)))
+          .distinct()
+        val replacement = (Seq(
+          semiJoinOnPartitions(unmatchedT, touched, partCols),
+          transformed) ++ inserts)
+          .map(df => df.select(tCols.map(col): _*))
+          .reduce(_.unionByName(_))
+        WorkingSet.using(replacement) {
+          val touchedRows = touched.collect()
+          val expected = replacement
+            .select(partCols.map(col): _*).distinct().collect().toSet
+          insertOverwriteDynamic(spark, table, replacement)
+          dropEmptiedPartitions(spark, table, partCols, touchedRows, expected)
+        }
+      }
     }
-    } finally joined.unpersist(false)
   }
 
   /** Size-aware small-file compaction — ALTER TABLE ... CONCATENATE

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.WorkingSet.{iterate, pin}
 
 /** Distributed k-means over embedding columns — the clustering primitive
   * behind training-data curation at scale (SemDeDup cluster-then-prune,
@@ -17,8 +18,9 @@ import org.apache.spark.sql.functions._
   *  - The mean update is one posexplode + two-level aggregate keyed on
   *    (group, cluster, dim) — cardinality k × dim, independent of row
   *    count, with map-side partial aggregation doing the heavy lifting.
-  *  - Per-round centroids are eagerly localCheckpoint'd: k × dim doubles,
-  *    so plans and lineage stay bounded no matter how many rounds run.
+  *  - Per-round centroids are pinned (k × dim doubles) and the previous
+  *    round released, so plans, lineage and residency stay bounded no
+  *    matter how many rounds run.
   *
   * Determinism contract (repo-wide): similarity scores are rounded to
   * `scoreDigits` before the argmax and ties break on the lowest cluster
@@ -39,7 +41,8 @@ import org.apache.spark.sql.functions._
 object Clustering {
 
   /** `assigned`: (id, cid, score); `centroids`: (cid, cvec) — both
-    * materialized (localCheckpoint) since models are queried repeatedly. */
+    * pinned since models are queried repeatedly; a caller that drops
+    * either releases it (`WorkingSet.release`). */
   final case class KMeansModel(assigned: DataFrame, centroids: DataFrame)
 
   val seedSpread = "spread"
@@ -56,9 +59,8 @@ object Clustering {
       .withColumn("grp", lit(0))
     val seeds = seedCentroids(base, k, seeding)
     val centroids = lloyd(base, seeds, iters, cosineScore)
-    val assigned = bestByScore(base, centroids, cosineScore)
-      .select(col("id"), col("cid"), col("score"))
-      .localCheckpoint(true)
+    val assigned = pin(bestByScore(base, centroids, cosineScore)
+      .select(col("id"), col("cid"), col("score")))
     KMeansModel(assigned, centroids.drop("grp"))
   }
 
@@ -105,13 +107,14 @@ object Clustering {
   private def toDoubleVec(c: Column): Column =
     transform(c, x => x.cast("double"))
 
-  /** One Lloyd round: argmax assignment + decimal-exact mean update;
-    * clusters that lose all members keep their previous centroid. */
+  /** `iters` Lloyd rounds: argmax assignment + decimal-exact mean update;
+    * clusters that lose all members keep their previous centroid. Each
+    * round's centroids are pinned and the previous round released; the
+    * returned pin is the caller's. */
   private[operators] def lloyd(
       base: DataFrame, seeds: DataFrame, iters: Int,
-      score: (Column, Column) => Column): DataFrame = {
-    var centroids = seeds.localCheckpoint(true)
-    for (_ <- 0 until math.max(iters, 1)) {
+      score: (Column, Column) => Column): DataFrame =
+    iterate(pin(seeds), math.max(iters, 1)) { centroids =>
       val assigned = bestByScore(base, centroids, score)
       val means = assigned
         .select(col("grp"), col("cid"), posexplode(col("vec")))
@@ -122,14 +125,11 @@ object Clustering {
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("grp"), col("cid"),
           transform(col("pm"), p => p.getField("m")).as("mvec"))
-      centroids = centroids
+      centroids
         .join(means, Seq("grp", "cid"), "left")
         .select(col("grp"), col("cid"),
           coalesce(col("mvec"), col("cvec")).as("cvec"))
-        .localCheckpoint(true)
     }
-    centroids
-  }
 
   /** Per-row argmax over the broadcast centroid table: highest rounded
     * score wins, ties go to the lowest cid (max_by on (score, -cid)). */

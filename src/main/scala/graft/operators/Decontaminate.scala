@@ -102,19 +102,17 @@ object Decontaminate {
     val evalGrams = evalSet
       .select(explode(TextOps.shingleSet(col(textCol), n)).as("ngram"))
       .distinct()
-    // the sizing count and the build share one cached materialization;
-    // released before return (the minhash persist discipline), so the
-    // verify join below re-derives the grams — two scans of the tiny
-    // side total, same envelope as `overlap`'s one plus the sketch
-    evalGrams.persist()
-    val filter =
-      try {
-        val nGrams = math.max(1L, evalGrams.count())
-        val (bits, hashes) = BloomFunctions.optimalParams(nGrams, fpp)
-        evalGrams
-          .agg(bloomBuild(col("ngram"), bits, hashes).as("f"))
-          .head().getAs[Array[Byte]](0)
-      } finally evalGrams.unpersist()
+    // the sizing count and the build share one working set, released
+    // before return, so the verify join below re-derives the grams — two
+    // scans of the tiny side total, same envelope as `overlap`'s one
+    // plus the sketch
+    val filter = graft.WorkingSet.using(evalGrams) {
+      val nGrams = math.max(1L, evalGrams.count())
+      val (bits, hashes) = BloomFunctions.optimalParams(nGrams, fpp)
+      evalGrams
+        .agg(bloomBuild(col("ngram"), bits, hashes).as("f"))
+        .head().getAs[Array[Byte]](0)
+    }
     corpus
       .select(col(idCol),
         explode(TextOps.shingleSet(col(textCol), n)).as("ngram"))

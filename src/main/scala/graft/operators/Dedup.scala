@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.WorkingSet.{iterate, pin, using}
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -13,24 +14,6 @@ import org.apache.spark.sql.functions._
   * SkewJoinHandler (ql/exec/SkewJoinHandler.java:74), done declaratively.
   */
 object Dedup {
-
-  /** Scale knob for the gram-cache layout (`spark.graft.dedup.sortCache`,
-    * default false): when true, the h-partitioned gram cache is also
-    * SORTED on h within partitions, so the cap join and both verifying
-    * self-join sides — sort-merge joins on h at cluster scale — read
-    * the cache sort-free (one sort paid at persist replaces two-plus
-    * per plan). Measured r16: at sf1 the sorted cache is ~10% faster
-    * end-to-end (Span16Drive: persist 8.5→8.0s, verify join 2.0→1.5s);
-    * at sf0.1 every h-join is a BROADCAST hash join (nothing to elide)
-    * and the sort is pure cost (q168 bench 2.06→2.44s), so the default
-    * stays false for small inputs and the driver's bench; set true
-    * wherever the gram table is big enough that the h-joins plan as
-    * sort-merge. */
-  private def sortCacheIfConfigured(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.dedup.sortCache", "false").toBoolean)
-      df.sortWithinPartitions("h")
-    else df
 
   /** Exact dedup: keep one representative row per key (hash-groupBy).
     * One shuffle on the key columns; Catalyst plans partial aggregation. */
@@ -72,35 +55,21 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    val (pairs, release) = minhashPipeline(
-      df, idCol, textCol, shingleSize, numHashes, bands, threshold, maxBucket)
-    // Eagerly materialize the (small) verified-pair set, truncating the
-    // lineage, so the two working-set caches can be dropped immediately —
-    // repeated calls in a long-lived session must not accumulate blocks.
-    // (Checkpoint blocks are reclaimed by the ContextCleaner once the
-    // returned frame is unreachable, unlike CacheManager-pinned persists.)
-    val out = pairs.localCheckpoint(true)
-    release()
-    out
+    val idx = buildMinhashIndex(df, idCol, textCol, shingleSize, numHashes, bands)
+    // the (small) verified-pair set is pinned so the index working set
+    // can go as soon as it materializes — repeated calls in a long-lived
+    // session must not accumulate blocks
+    using(idx.shingled, idx.banded) {
+      pin(minhashPipeline(idx, threshold, maxBucket))
+    }
   }
 
-  /** The lazy pipeline + a release handle for the two persisted working
-    * sets — shared by the eager public wrapper and plan inspection. */
+  /** The lazy self-join pipeline over an index — shared by the eager
+    * public wrapper and plan inspection (inside a `using` of the index). */
   private[graft] def minhashPipeline(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int,
-      numHashes: Int,
-      bands: Int,
-      threshold: Double,
-      maxBucket: Int): (DataFrame, () => Unit) = {
-    val idx = buildMinhashIndex(df, idCol, textCol, shingleSize, numHashes, bands)
-    val out = verifyPairs(
-      candidatePairs(idx.banded, maxBucket), idx.shingled, idx.shingled,
-      threshold, "id_a", "id_b")
-    (out, () => idx.release())
-  }
+      idx: MinHashIndex, threshold: Double, maxBucket: Int): DataFrame =
+    verifyPairs(candidatePairs(idx.banded, maxBucket), idx.shingled,
+      idx.shingled, threshold, "id_a", "id_b")
 
   /** A reusable MinHash-LSH index: per-doc shingle sets (for exact
     * verification) + exploded band keys (for candidate generation), with
@@ -108,28 +77,22 @@ object Dedup {
     * family. Both frames are ordinary DataFrames — write them to parquet
     * (partition `banded` by `band`) and read them back to make the index
     * durable across batches (construct the case class directly from the
-    * read frames; parquet-backed frames don't need the persist). Call
-    * `release()` when done with an in-memory index. */
+    * read frames). */
   final case class MinHashIndex(
       shingled: DataFrame,
       banded: DataFrame,
       shingleSize: Int,
       numHashes: Int,
-      bands: Int) {
-    /** Drop the cached working set (no-op for non-persisted frames). */
-    def release(): Unit = {
-      shingled.unpersist(false); banded.unpersist(false); ()
-    }
-  }
+      bands: Int)
 
-  /** Sketch a corpus once into a MinHashIndex. Both frames are persisted
-    * (memory-and-disk): the shingle set feeds signature generation AND the
-    * verification join(s), the band keys feed the bucket-size guard AND
-    * the candidate join — without the persist every downstream action
-    * would re-read and re-sketch the corpus. Release with
-    * `index.release()` (the *NearDups wrappers do), or write the frames
-    * to parquet for a durable index that incremental batches probe
-    * without ever touching the corpus text again. */
+  /** Sketch a corpus into a MinHashIndex (lazy frames). The shingle set
+    * feeds signature generation AND the verification join(s), the band
+    * keys feed the bucket-size guard AND the candidate join, so an
+    * in-memory index is a working set: probe it inside
+    * `WorkingSet.using(index.shingled, index.banded)` (the *NearDups
+    * wrappers do), or write the frames to parquet for a durable index
+    * that incremental batches probe without ever touching the corpus
+    * text again. */
   def buildMinhashIndex(
       df: DataFrame,
       idCol: String,
@@ -139,7 +102,7 @@ object Dedup {
       bands: Int = 16): MinHashIndex = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-    // r16: the shingle build is bound once via the explode(filter(array(
+    // the shingle build is bound once via the explode(filter(array(
     // …))) idiom — a plain alias + size filter is re-inlined by the
     // optimizer into both the Filter and the Project, running the full
     // tokenize+shingle twice per document (the sharedSpans note). An
@@ -148,12 +111,10 @@ object Dedup {
       .select(col(idCol).as("id"),
         explode(filter(array(TextOps.shingleSet(col(textCol), shingleSize)),
           s => size(s) > 0)).as("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = shingled.select(col("id"),
         posexplode(TextOps.bandHashes(
           TextOps.minhashSignature(col("shingles"), numHashes), bands)))
       .select(col("id"), col("pos").as("band"), col("col").as("key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     MinHashIndex(shingled, banded, shingleSize, numHashes, bands)
   }
 
@@ -168,9 +129,9 @@ object Dedup {
     * the batch variant); only ids cross the shuffle, and exact verification
     * joins the two shingle stores afterwards. Index-side bucket sizes are
     * recomputed here; pre-aggregate and store them alongside a durable
-    * index to skip that scan per batch. The (small) result is eagerly
-    * materialized and the probe's sketch cache released before returning;
-    * the INDEX cache is the caller's to `release()`. */
+    * index to skip that scan per batch. The (small) result is pinned and
+    * the probe's sketch working set released before returning; the
+    * INDEX working set is the caller's to scope. */
   def minhashAgainstIndex(
       newDf: DataFrame,
       idCol: String,
@@ -191,11 +152,10 @@ object Dedup {
         Seq("band", "key"))
       .select("new_id", "index_id")
       .distinct()
-    val out = verifyPairs(candidates, probe.shingled, index.shingled,
-        threshold, "new_id", "index_id")
-      .localCheckpoint(true)
-    probe.release()
-    out
+    using(probe.shingled, probe.banded) {
+      pin(verifyPairs(candidates, probe.shingled, index.shingled,
+        threshold, "new_id", "index_id"))
+    }
   }
 
   /** SimHash near-dup pairs: 64-bit fingerprint, banded into 16-bit
@@ -350,44 +310,38 @@ object Dedup {
     val edges = fwd
       .union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = nodes
-        .select(col(idCol).cast("long").as("id"),
-          col(idCol).cast("long").as("comp"))
-        .localCheckpoint(true)
-      var prevSum = labels.agg(sum(col("comp").cast("decimal(38,0)")))
+    def labelSum(labels: DataFrame) =
+      labels.agg(sum(col("comp").cast("decimal(38,0)")))
         .collect().head.getDecimal(0)
-      var it = 0
+    using(edges) {
+      val initial = pin(nodes
+        .select(col(idCol).cast("long").as("id"),
+          col(idCol).cast("long").as("comp")))
+      var prevSum = labelSum(initial)
       // null sum = zero rows (or every id cast to NULL): nothing can
       // propagate, so the initial label table is already the answer.
       var converged = prevSum == null
-      while (!converged && it < maxIter) {
+      val labels = iterate(initial, if (converged) 0 else maxIter,
+        until = (_, next) => {
+          val s = labelSum(next)
+          converged = s == null || s.compareTo(prevSum) == 0 // labels only decrease
+          prevSum = s
+          converged
+        }) { labels =>
         val viaNbr = edges
           .join(labels.select(col("id").as("dst"), col("comp")), "dst")
           .groupBy("src").agg(min("comp").as("ncomp"))
           .withColumnRenamed("src", "id")
-        val prev = labels
-        labels = labels.join(viaNbr, Seq("id"), "left")
+        labels.join(viaNbr, Seq("id"), "left")
           .select(col("id"),
             least(col("comp"), coalesce(col("ncomp"), col("comp")))
               .as("comp"))
-          .localCheckpoint(true)
-        // the new round is materialized (eager checkpoint), so the previous
-        // round's pinned blocks can go — otherwise ~diameter copies of the
-        // label table stay resident for the session.
-        org.apache.spark.sql.graftbridge.CheckpointBridge.release(prev)
-        val s = labels.agg(sum(col("comp").cast("decimal(38,0)")))
-          .collect().head.getDecimal(0)
-        converged = s == null || s.compareTo(prevSum) == 0 // labels only decrease
-        prevSum = s
-        it += 1
       }
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds")
       labels.withColumnRenamed("id", idCol)
         .withColumnRenamed("comp", "component")
-    } finally edges.unpersist(false)
+    }
   }
 
   /** Keep one canonical document per near-dup cluster (the smallest id),
@@ -463,12 +417,10 @@ object Dedup {
     // h-layout exchange-free (HashPartitioning(h) satisfies each one's
     // required distribution — cached plans keep their partitioning,
     // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-    // default). Previously the cache held UNpartitioned grams and the
-    // candidate self-join re-exchanged them; the r15 reshape moves the
-    // one unavoidable h-shuffle BEFORE the persist so it is paid once
-    // into the cache instead of once per downstream plan (released
-    // below once the small pair set materializes).
-    // r16: the tokenize is bound as a LAMBDA variable (`transform(array(
+    // default). The one unavoidable h-shuffle runs BEFORE the persist so
+    // it is paid once into the cache instead of once per downstream plan
+    // (released once the small pair set materializes).
+    // The tokenize is bound as a LAMBDA variable (`transform(array(
     // toks), t -> …)`) instead of an aliased column — the optimizer
     // inlines a plain alias into both the size-guard Filter and the
     // Generate, re-running the full-text regex split twice per document
@@ -488,8 +440,6 @@ object Dedup {
       .select(col("id"), col("pg.pos").as("pos"), col("pg.gram").as("gram"),
         xxhash64(col("pg.gram")).as("h"))
       .repartition(col("h"))
-      .transform(sortCacheIfConfigured)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ok = gramText.groupBy("h").agg(count(lit(1)).as("bn"))
       .filter(col("bn") <= maxBucket).select("h")
     val slim = gramText.join(ok, Seq("h"))
@@ -499,11 +449,9 @@ object Dedup {
       .join(slim.select(col("h"), col("id").as("id_b"),
         col("pos").as("pos_b"), col("gram").as("g_b")), Seq("h"))
       .filter(col("id_a") < col("id_b") && col("g_a") === col("g_b"))
-    val out = verified.groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_spans"))
-      .localCheckpoint(true)
-    gramText.unpersist(false)
-    out
+    using(gramText) {
+      pin(verified.groupBy("id_a", "id_b").agg(count(lit(1)).as("n_spans")))
+    }
   }
 
   /** Asymmetric containment (quote / subset detection): for every
@@ -540,9 +488,9 @@ object Dedup {
     // rows share h and so a partition, and dedup on all three columns
     // (≡ dedup on (id, g) — h is a function of g) keeps h among the
     // grouping keys so the h-partitioning satisfies the aggregate —
-    // dedup costs no extra shuffle where distinct-then-hash previously
-    // paid a full (id, g)-string exchange.
-    // r16: tokenize bound as a lambda variable so it evaluates once per
+    // dedup costs no extra shuffle (distinct-then-hash would pay a full
+    // (id, g)-string exchange).
+    // The tokenize is bound as a lambda variable so it evaluates once per
     // document (the sharedSpans note — a plain alias is inlined into
     // Filter + Generate and the split ran twice); size guard folded into
     // the lambda, empty array ≡ dropped row.
@@ -557,8 +505,6 @@ object Dedup {
       .select(col("id"), col("g"), xxhash64(col("g")).as("h"))
       .repartition(col("h"))
       .dropDuplicates()
-      .transform(sortCacheIfConfigured)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ok = grams.groupBy("h").agg(countDistinct(col("id")).as("gdf"))
       .filter(col("gdf") <= maxDf).select("h")
     val kept = grams.join(ok, Seq("h"))
@@ -574,9 +520,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("n_shared"),
         (col("n_shared").cast("double") / col("__na")).as("containment"))
       .filter(col("containment") >= threshold)
-      .localCheckpoint(true)
-    grams.unpersist(false)
-    out
+    using(grams)(pin(out))
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
@@ -623,11 +567,10 @@ object Dedup {
       .select(col("cid"), col("ncv"))
     // nearest centroid; ties break to the lowest cid so assignment is
     // deterministic under any aggregation merge order
-    // r15: the assignment table anchors FOUR consumers (the cluster-size
+    // the assignment table anchors FOUR consumers (the cluster-size
     // cap, both sides of the intra-cluster join, and the final output) —
-    // persist it once instead of re-running the k-way scoring crossJoin
-    // per consumer; the slim (id, cid, dropped) result is pinned before
-    // the working set is released (the minhashNearDups discipline).
+    // a working set, so the k-way scoring crossJoin runs once; the slim
+    // (id, cid, dropped) result is pinned before it is released.
     val best = base.crossJoin(broadcast(ncent))
       .select(col("id"), col("nv"), col("cid"),
         Vectors.dot(col("nv"), col("ncv")).as("sim"))
@@ -635,7 +578,6 @@ object Dedup {
       .agg(min_by(struct(col("cid"), col("nv")),
         struct(-col("sim"), col("cid"))).as("b"))
       .select(col("id"), col("b.cid").as("cid"), col("b.nv").as("nv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val prunable = best.join(
       best.groupBy("cid").agg(count(lit(1)).as("cn"))
         .filter(col("cn") <= maxCluster).select("cid"),
@@ -650,8 +592,6 @@ object Dedup {
       .join(droppedIds.withColumn("d", lit(true)), Seq("id"), "left_outer")
       .select(col("id"), col("cid"),
         coalesce(col("d"), lit(false)).as("dropped"))
-      .localCheckpoint(true)
-    best.unpersist(false)
-    out
+    using(best)(pin(out))
   }
 }

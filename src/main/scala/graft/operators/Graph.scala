@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.WorkingSet.{iterate, pin, release, using}
 
 /** Iterative graph analytics over edge-list DataFrames — the power-method
   * family (PageRank here; label propagation lives in
@@ -65,46 +66,46 @@ object Graph {
       .select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
       .repartition(col("src"))
-    val e = (if (assumeEdgesDistinct) eRaw else eRaw.dropDuplicates())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val e = if (assumeEdgesDistinct) eRaw else eRaw.dropDuplicates()
+    using(e) {
       // the rank table carries the static out-degree so each round is
       // ONE edge join + one aggregate, not two joins; node table built
-      // once and checkpoint-pinned (it anchors every round's left join).
+      // once and pinned (it anchors every round's left join).
       // outdeg groups on the persisted frame's own partitioning key —
       // exchange-free. For symmetrized graphs (every node has an
       // out-edge, e.g. q173's union of both directions) the outdeg
       // table IS the node table: `assumeAllNodesAreSources` skips the
       // union-distinct over 2|E| rows and its left join.
       val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val nodes = (if (assumeAllNodesAreSources)
+      val nodes = pin(if (assumeAllNodesAreSources)
           outdeg.select(col("src").as("node"), col("outdeg"))
         else e.select(col("src").as("node"))
           .union(e.select(col("dst").as("node"))).distinct()
           .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left"))
-        .localCheckpoint(true)
       val nV: Long =
         if (redistributeDangling || tol > 0) nodes.count() else 0L
-      var pr = nodes.withColumn("pr", lit(1.0))
-      var prevCut: DataFrame = null
-      // r15: the eager per-round cut is only REQUIRED when a driver
-      // scalar reads the previous round each round (dangling mass /
-      // tol delta) — without it those reads would recompute the whole
-      // chain per round. The default fixed-rounds mode is a LINEAR
-      // chain (each round's rank table is consumed exactly once by the
-      // next round), so intermediate rounds need no materialization:
-      // one action evaluates every round, saving a driver-blocking
-      // checkpoint job per round; a periodic cut (every `cutEvery`
-      // rounds) still bounds plan/optimizer growth for large `iters`,
-      // and the FINAL round keeps its eager checkpoint (the returned
-      // frame must be pinned before the edge cache is released).
+      // a per-round cut is only REQUIRED when a driver scalar reads the
+      // previous round each round (dangling mass / tol delta) — without
+      // it those reads would recompute the whole chain per round. The
+      // default fixed-rounds mode is a LINEAR chain (each round's rank
+      // table is consumed exactly once by the next round), so
+      // intermediate rounds need no materialization: one action
+      // evaluates every round, saving a driver-blocking checkpoint job
+      // per round; a periodic cut still bounds plan/optimizer growth
+      // for large `iters`, and the FINAL round is pinned (the returned
+      // frame must outlive the edge working set).
       val perRoundCut = redistributeDangling || tol > 0
       val cutEvery = 8
-      var sinceCut = 0
-      var i = 1
-      var converged = false
-      while (i <= iters && !converged) {
-        val prevPr = pr
+      // mean absolute rank change against the previous round, which is
+      // still pinned while this runs
+      def meanDelta(prevPr: DataFrame, pr: DataFrame): Boolean =
+        pr.join(prevPr.select(col("node"), col("pr").as("__prev")), "node")
+          .agg(sum(abs(col("pr") - col("__prev"))).as("d"))
+          .head().getDouble(0) / nV <= tol
+      val pr = iterate(nodes.withColumn("pr", lit(1.0)), iters,
+          cutEvery = if (perRoundCut) 1 else cutEvery,
+          until = if (tol > 0 && nV > 0) meanDelta else (_, _) => false) {
+          prevPr =>
         // dangling mass of the PREVIOUS round: exact decimal sum over
         // the (usually small) outdeg-less slice, one scalar to the
         // driver, folded back in as a per-node constant
@@ -122,47 +123,20 @@ object Graph {
             round(col("pr") / col("outdeg"), 12)
               .cast("decimal(28,12)").as("w"))
           .groupBy("dst").agg(sum("w").as("mass"))
-        val prNext = nodes
+        nodes
           .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
           .select(col("node"), col("outdeg"),
             round(lit(teleport) +
               lit(damping) * (coalesce(col("mass").cast("double"), lit(0.0)) +
                 lit(danglingPerNode)),
               9).as("pr"))
-        sinceCut += 1
-        val doCut = perRoundCut || i == iters || sinceCut >= cutEvery
-        // the previous pinned round is released only AFTER the tol
-        // delta below has read it (prevPr must stay pinned through the
-        // measurement)
-        var toRelease: DataFrame = null
-        pr = if (doCut) {
-          // eager cut (the connectedComponents discipline): bounds the
-          // plan and pins this round's shuffle work
-          val cut = prNext.localCheckpoint(true)
-          toRelease = prevCut
-          prevCut = cut
-          sinceCut = 0
-          cut
-        } else prNext
-        if (tol > 0 && nV > 0) {
-          // mean absolute rank change; prevPr is still pinned here —
-          // its release happens only after the delta is measured
-          val l1 = pr
-            .join(prevPr.select(col("node"), col("pr").as("__prev")), "node")
-            .agg(sum(abs(col("pr") - col("__prev"))).as("d"))
-            .head().getDouble(0)
-          converged = l1 / nV <= tol
-        }
-        if (toRelease != null)
-          org.apache.spark.sql.graftbridge.CheckpointBridge.release(toRelease)
-        i += 1
       }
-      // the final round's checkpoint backs the returned frame (the one
-      // pinned |V|-row copy — the connectedComponents contract); the
-      // node anchor is no longer needed
-      org.apache.spark.sql.graftbridge.CheckpointBridge.release(nodes)
+      // the final round's pin backs the returned frame (the one pinned
+      // |V|-row copy — the connectedComponents contract); the node
+      // anchor is no longer needed
+      release(nodes)
       pr.select(col("node"), col("pr"))
-    } finally e.unpersist(false)
+    }
   }
 
   /** `hops` rounds of in-neighbor feature averaging (the GraphSAGE-mean
@@ -186,8 +160,7 @@ object Graph {
       .select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    using(e) {
       var f = features.select(col(nodeCol).cast("string").as("node"),
         col(valCol).cast("double").as("v"))
       for (_ <- 1 to hops) {
@@ -198,9 +171,8 @@ object Graph {
               .cast("double") / count(lit(1)), 6).as("v"))
           .select(col("dst").as("node"), col("n_nbrs"), col("v"))
       }
-      f.select(col("node"), col("n_nbrs"), col("v").as("nbr_mean"))
-        .localCheckpoint(true)
-    } finally e.unpersist(false)
+      pin(f.select(col("node"), col("n_nbrs"), col("v").as("nbr_mean")))
+    }
   }
 
   /** Bounded-round k-core peeling: `rounds` rounds of "compute degrees,
@@ -226,29 +198,21 @@ object Graph {
         greatest(col(aCol).cast("string"), col(bCol).cast("string")).as("b"))
       .filter(col("a").isNotNull && col("a") =!= col("b"))
       .distinct()
-    var e = und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
-    var deg: DataFrame = null
-    for (i <- 1 to rounds) {
-      deg = e.groupBy("src").agg(count(lit(1)).as("degree"))
-      // the final round only needs its degree table — restricting the
-      // edge set again would be dead work (and deg must materialize
-      // BEFORE the edges it reads are released)
-      if (i < rounds) {
-        val keep = deg.filter(col("degree") >= k).select("src")
-        val prev = e
-        e = e.join(keep, Seq("src"), "left_semi")
-          .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst")
-          .localCheckpoint(true)
-        org.apache.spark.sql.graftbridge.CheckpointBridge.release(prev)
-      }
+    def degrees(e: DataFrame) = e.groupBy("src").agg(count(lit(1)).as("degree"))
+    // the final round only needs its degree table — restricting the edge
+    // set again would be dead work (and the degrees must be pinned
+    // BEFORE the edges they read are released)
+    val e = iterate(pin(und.select(col("a").as("src"), col("b").as("dst"))
+        .union(und.select(col("b").as("src"), col("a").as("dst")))),
+        rounds - 1) { e =>
+      val keep = degrees(e).filter(col("degree") >= k).select("src")
+      e.join(keep, Seq("src"), "left_semi")
+        .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
+        .select("src", "dst")
     }
-    val out = deg.filter(col("degree") >= k)
-      .select(col("src").as("node"), col("degree"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graftbridge.CheckpointBridge.release(e)
+    val out = pin(degrees(e).filter(col("degree") >= k)
+      .select(col("src").as("node"), col("degree")))
+    release(e)
     out
   }
 
@@ -277,7 +241,7 @@ object Graph {
     // the caller guarantees a < b, non-null, distinct edges — q184's
     // sampled co-purchase graph is built exactly so — and the
     // normalize + distinct exchange is skipped.
-    val und0 =
+    val und =
       if (assumeNormalized)
         edges.select(col(aCol).cast("string").as("a"),
           col(bCol).cast("string").as("b"))
@@ -286,54 +250,47 @@ object Graph {
           greatest(col(aCol).cast("string"), col(bCol).cast("string")).as("b"))
         .filter(col("a").isNotNull && col("a") =!= col("b"))
         .distinct()
-    val und = und0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // r15: one cache pass (explode) instead of union's two, and the
-      // degree table is persisted — it anchors BOTH orientation joins
-      // and the final zero-fill join, which otherwise re-aggregate it
-      // three times
-      val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
-        .groupBy("v").agg(count(lit(1)).as("d"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // orient toward the (degree, id)-larger endpoint; carry the head's
-      // degree so the wedge filter can compare order keys without a
-      // second degree join
-      val oriented = und
-        .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-        .select(
-          when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-            struct(col("a").as("s"), col("b").as("t"), col("db").as("dt")))
-            .otherwise(
-              struct(col("b").as("s"), col("a").as("t"), col("da").as("dt")))
-            .as("e"))
-        .select(col("e.s").as("s"), col("e.t").as("t"), col("e.dt").as("dt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val wedges = oriented.select(col("s"), col("t").as("u"), col("dt").as("du"))
-          .join(oriented.select(col("s"), col("t").as("w"), col("dt").as("dw")),
-            Seq("s"))
-          .filter(struct(col("du"), col("u")) < struct(col("dw"), col("w")))
-          .select(col("s"), col("u"), col("w"))
-        val tris = wedges.join(
-          oriented.select(col("s").as("u"), col("t").as("w")),
-          Seq("u", "w"), "left_semi")
-        // one pass over the triangle set: each triangle credits all
-        // three corners (explode, not three unioned rescans)
-        val perNode = tris
-          .select(explode(array(col("s"), col("u"), col("w"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("triangles"))
-        // materialize the small |V|-row result BEFORE the persisted
-        // edge frames are released (the minhashNearDups discipline) —
-        // returning it lazy would silently recompute und/oriented 3×
-        deg.select(col("v").as("node"))
-          .join(perNode, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("triangles"), lit(0L)).as("triangles"))
-          .localCheckpoint(true)
-      } finally { oriented.unpersist(false); deg.unpersist(false) }
-    } finally und.unpersist(false)
+    // one cache pass (explode) instead of union's two, and the degree
+    // table is a working set too — it anchors BOTH orientation joins and
+    // the final zero-fill join, which otherwise re-aggregate it three
+    // times
+    val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
+      .groupBy("v").agg(count(lit(1)).as("d"))
+    // orient toward the (degree, id)-larger endpoint; carry the head's
+    // degree so the wedge filter can compare order keys without a
+    // second degree join
+    val oriented = und
+      .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
+      .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
+      .select(
+        when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
+          struct(col("a").as("s"), col("b").as("t"), col("db").as("dt")))
+          .otherwise(
+            struct(col("b").as("s"), col("a").as("t"), col("da").as("dt")))
+          .as("e"))
+      .select(col("e.s").as("s"), col("e.t").as("t"), col("e.dt").as("dt"))
+    using(und, deg, oriented) {
+      val wedges = oriented.select(col("s"), col("t").as("u"), col("dt").as("du"))
+        .join(oriented.select(col("s"), col("t").as("w"), col("dt").as("dw")),
+          Seq("s"))
+        .filter(struct(col("du"), col("u")) < struct(col("dw"), col("w")))
+        .select(col("s"), col("u"), col("w"))
+      val tris = wedges.join(
+        oriented.select(col("s").as("u"), col("t").as("w")),
+        Seq("u", "w"), "left_semi")
+      // one pass over the triangle set: each triangle credits all
+      // three corners (explode, not three unioned rescans)
+      val perNode = tris
+        .select(explode(array(col("s"), col("u"), col("w"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("triangles"))
+      // pin the small |V|-row result BEFORE the edge working sets are
+      // released — returning it lazy would silently recompute
+      // und/oriented 3×
+      pin(deg.select(col("v").as("node"))
+        .join(perNode, Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("triangles"), lit(0L)).as("triangles")))
+    }
   }
 
   /** Synchronous label propagation (LPA) community detection — the
@@ -355,21 +312,19 @@ object Graph {
     *
     * Scale shape: each round is one shuffle-join of the |V|-row label
     * table with the edge list plus a (dst, label)-keyed count — the
-    * power-method cost profile; per-round labels are eagerly
-    * localCheckpoint'd so lineage stays bounded. Returns (node, label)
-    * after `iters` rounds. */
+    * power-method cost profile; per-round labels are pinned (and the
+    * previous round released) so lineage and residency stay bounded.
+    * Returns (node, label) after `iters` rounds. */
   def labelPropagation(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    using(e) {
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst"))).distinct()
-      var labels = nodes.select(col("node"), col("node").as("label"))
-        .localCheckpoint(true)
-      for (_ <- 0 until math.max(iters, 1)) {
+      iterate(pin(nodes.select(col("node"), col("node").as("label"))),
+          math.max(iters, 1)) { labels =>
         val freq = e
           .join(labels.withColumnRenamed("node", "src"), "src")
           .groupBy(col("dst").as("node"), col("label"))
@@ -379,13 +334,11 @@ object Graph {
           .groupBy("node")
           .agg(min_by(col("label"), struct(-col("c"), col("label")))
             .as("new_label"))
-        labels = labels
+        labels
           .join(winner, Seq("node"), "left")
           .select(col("node"),
             coalesce(col("new_label"), col("label")).as("label"))
-          .localCheckpoint(true)
       }
-      labels
-    } finally e.unpersist(false)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.WorkingSet
 
 /** Training-mix monitoring: distribution statistics over corpus slices.
   * The question a 100 TB pipeline asks after every re-mix: "did source
@@ -19,8 +20,9 @@ object Mix {
     * change the result), then the sum is rounded to 6 — the engine's
     * standard cross-engine float contract. Output: sliceCol, n, kl. */
   def klDrift(df: DataFrame, sliceCol: String, keyCol: String): DataFrame = {
-    val cell = df.groupBy(sliceCol, keyCol).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds slice totals, global totals, and terms
+    // feeds slice totals, global totals, and terms
+    val cell =
+      WorkingSet.pin(df.groupBy(sliceCol, keyCol).agg(count(lit(1)).as("c")))
     val slice = cell.groupBy(sliceCol).agg(sum("c").as("ns"))
     val global = cell.groupBy(keyCol).agg(sum("c").as("ck"))
     val total = cell.agg(sum("c").as("n")) // 1-row

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
+import graft.WorkingSet
 
 /** Product quantization (PQ) for approximate nearest neighbor at 100 TB —
   * the memory-side complement to `Similarity.buildIvf`'s partition
@@ -55,12 +56,12 @@ object Pq {
       .select(col("id"), col("pos").as("grp"), col("col").as("vec"))
     val seeds = Clustering.seedCentroids(subbed, ksub, seeding)
     val codebooks = Clustering.lloyd(subbed, seeds, iters, Clustering.negL2Score)
-    val codes = Clustering.bestByScore(subbed, codebooks, Clustering.negL2Score)
-      .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("grp"), col("cid")))).as("sc"))
-      .select(col("id"),
-        transform(col("sc"), p => p.getField("cid")).as("codes"))
-      .localCheckpoint(true)
+    val codes = WorkingSet.pin(
+      Clustering.bestByScore(subbed, codebooks, Clustering.negL2Score)
+        .groupBy("id")
+        .agg(array_sort(collect_list(struct(col("grp"), col("cid")))).as("sc"))
+        .select(col("id"),
+          transform(col("sc"), p => p.getField("cid")).as("codes")))
     PqModel(codes, codebooks.select(col("grp").as("sub"), col("cid"),
       col("cvec")), m, dsub, ksub)
   }

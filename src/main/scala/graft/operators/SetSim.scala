@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.WorkingSet
 
 /** EXACT set-similarity self-join with prefix filtering (Bayardo et al.
   * "Scaling Up All Pairs Similarity Search", WWW'07; Chaudhuri et al.
@@ -41,26 +42,24 @@ object SetSim {
   def jaccardSelfJoin(
       df: DataFrame, idCol: String, textCol: String, threshold: Double,
       maxBucket: Int = 0): DataFrame = {
-    val (pairs, release) =
-      jaccardPipeline(df, idCol, textCol, threshold, maxBucket)
-    // Eagerly materialize the (output-sized) pair set so the working-set
-    // cache can drop immediately — the minhashNearDups discipline.
-    val out = pairs.localCheckpoint(true)
-    release()
-    out
-  }
-
-  /** The lazy pipeline + release handle for the persisted ordered-token
-    * working set — shared by the eager public wrapper and plan specs. */
-  private[graft] def jaccardPipeline(
-      df: DataFrame, idCol: String, textCol: String, threshold: Double,
-      maxBucket: Int): (DataFrame, () => Unit) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
+    val ordered = orderedTokens(df, idCol, textCol)
+    // the (output-sized) pair set is pinned so the ordered-token working
+    // set can drop as soon as it materializes
+    WorkingSet.using(ordered) {
+      WorkingSet.pin(jaccardPipeline(ordered, threshold, maxBucket))
+    }
+  }
+
+  /** Per doc: (id, toks, len), the distinct tokens rarest first — the
+    * working set both the prefix index and the verify join read. */
+  private[graft] def orderedTokens(
+      df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tok = df
       // explode(filter(array(…))) binding: tokenize once per doc — a
       // plain alias + size filter is inlined into both Filter and
-      // Project by the optimizer and ran the tokenize twice (r16)
+      // Project by the optimizer and ran the tokenize twice
       .select(col(idCol).as("id"),
         explode(filter(array(tokensOf(col(textCol))),
           t => size(t) > 0)).as("toks"))
@@ -70,12 +69,18 @@ object SetSim {
     // Per doc: tokens ascending by (global df, token) — rarest first.
     // The sort is per-document (length-bounded), not global: no global
     // rank table exists, the (df, token) tuple IS the order.
-    val ordered = exploded.join(dfreq, "token")
+    exploded.join(dfreq, "token")
       .groupBy("id")
       .agg(expr("transform(array_sort(collect_list(struct(dfreq, token)))," +
         " s -> s.token)").as("toks"))
       .withColumn("len", size(col("toks")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The lazy prefix-filter pipeline over `orderedTokens` — shared by the
+    * eager public wrapper and plan specs (inside a `using` of
+    * `ordered`). */
+  private[graft] def jaccardPipeline(
+      ordered: DataFrame, threshold: Double, maxBucket: Int): DataFrame = {
     val prefixLen = (col("len") - ceil(lit(threshold) * col("len")) + 1)
       .cast("int")
     // posexplode keeps each prefix token's 1-based position in the
@@ -111,7 +116,7 @@ object SetSim {
           overlapUb.cast("double") >= needed - lit(1e-9))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val out = cands
+    cands
       .join(ordered.select(col("id").as("id_a"), col("toks").as("ta"),
         col("len").as("na")), "id_a")
       .join(ordered.select(col("id").as("id_b"), col("toks").as("tb"),
@@ -124,6 +129,5 @@ object SetSim {
         lit(threshold) * col("uni").cast("double"))
       .select(col("id_a"), col("id_b"),
         round(col("inter").cast("double") / col("uni"), 6).as("jaccard"))
-    (out, () => { ordered.unpersist(false); () })
   }
 }

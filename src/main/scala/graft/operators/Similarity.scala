@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.WorkingSet
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -162,9 +163,8 @@ object Similarity {
     }
     // materialize: the index is queried repeatedly — without this every
     // searchIvf action re-runs all Lloyd iterations from lineage
-    val builtCentroids = centroids.localCheckpoint(true)
-    val builtAssigned = assignToCentroids(base, builtCentroids)
-      .localCheckpoint(true)
+    val builtCentroids = WorkingSet.pin(centroids)
+    val builtAssigned = WorkingSet.pin(assignToCentroids(base, builtCentroids))
     Ivf(builtAssigned, builtCentroids)
   }
 

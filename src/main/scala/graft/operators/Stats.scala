@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.WorkingSet
 
 /** Distribution statistics for feature preparation: per-group outlier
   * clipping and standardization, built on exact arithmetic so results
@@ -178,21 +179,19 @@ object Stats {
       Seq(element_at(col("__pb"), 2 * i + 1).as(s"__lo_$name"),
         element_at(col("__pb"), 2 * i + 2).as(s"__hi_$name"))
     }
-    // r16: brackets and dec are |groups|-row tables whose SUBPLANS are the
+    // brackets and dec are |groups|-row tables whose SUBPLANS are the
     // expensive part (the sketch build is a full-corpus ObjectHashAggregate;
     // dec a full-corpus count pass). Referenced lazily they re-execute per
     // consumer — the executed sf0.1 plan carried 77 parquet scans and 80
     // percentile_approx aggregates because column pruning makes each
-    // consumer's copy non-identical, defeating ReuseExchange. Persist both
-    // (materialized by the one eager pin below), so the sketch and the
-    // count pass run exactly once (§5 working set; the semanticDedup
-    // `best` discipline).
+    // consumer's copy non-identical, defeating ReuseExchange. Both are
+    // working sets (materialized by the one pin below), so the sketch and
+    // the count pass run exactly once.
     val brackets = nn.groupBy(groupCol)
       .agg(count(lit(1)).as("__n"),
         percentile_approx(col(valCol), array(probes.map(lit): _*), lit(acc))
           .as("__pb"))
       .select(col(groupCol).as("__g") +: col("__n") +: bracketCols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val withB = nn.join(brackets, col(groupCol) <=> col("__g"), "inner")
     val cntAggs = ps.flatMap { case (name, _) =>
       Seq(
@@ -204,7 +203,6 @@ object Stats {
     val dec = withB.groupBy(col("__g"))
       .agg(cntAggs.head, cntAggs.tail: _*)
       .join(brackets, Seq("__g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def rankOf(p: BigDecimal): Column =
       greatest(lit(1), ceil(col("__n") * lit(p.bigDecimal)))
     // interior rows for EVERY quantile in one scan: tag each row with
@@ -249,16 +247,14 @@ object Stats {
           .when(r > col(s"__clt_hi_$name"), col(s"__hi_$name"))
           .otherwise(col(s"__sel_$name")))
     }
-    // pin the |groups|-row result eagerly (one driver-blocking job runs
-    // the whole three-pass pipeline with the persisted intermediates
-    // live), then release the working set — the Dedup/semanticDedup
-    // lifecycle. The caller's action reads the tiny checkpointed table.
-    val pinned = out.select(col("__g").as(groupCol) +: ps.map {
-      case (name, _) => col(name)
-    }: _*).localCheckpoint(true)
-    brackets.unpersist(false)
-    dec.unpersist(false)
-    pinned
+    // pin the |groups|-row result (one driver-blocking job runs the
+    // whole three-pass pipeline with the working sets live), then
+    // release them. The caller's action reads the tiny pinned table.
+    WorkingSet.using(brackets, dec) {
+      WorkingSet.pin(out.select(col("__g").as(groupCol) +: ps.map {
+        case (name, _) => col(name)
+      }: _*))
+    }
   }
 
   /** Shared rank-bounds machinery: `rankQuantiles` joined back to the

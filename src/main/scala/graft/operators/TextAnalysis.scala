@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.WorkingSet.{pin, release, using}
 
 /** Text analysis for training-data curation: language ID, quality
   * scoring, token counting, document fingerprinting. All per-row column
@@ -132,22 +133,21 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("doc_id"),
       explode(TextOps.tokens(col(textCol))).as("term"))
-    // tf is the working set both branches need (its groups ARE the
-    // distinct (doc, term) pairs, so df-counting needs no second explode
-    // over the corpus); materialize it once — exchange reuse does not
-    // fire across the join's probe/broadcast branches, so without this
-    // the explode+shuffle would run twice. An eager localCheckpoint
-    // beats a lazy persist here (measured r16: the cache path runs the
-    // tf aggregate without AQE — canChangeCachedPlanOutputPartitioning
-    // default — and pays columnar encode/decode; the checkpoint variant
-    // was ~1.4× faster at sf0.1).
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    // tf is the table both branches need (its groups ARE the distinct
+    // (doc, term) pairs, so df-counting needs no second explode over the
+    // corpus); pin it once — exchange reuse does not fire across the
+    // join's probe/broadcast branches, so without this the
+    // explode+shuffle would run twice. A pin beats a scoped persist here
+    // (the cache path runs the tf aggregate without AQE —
+    // canChangeCachedPlanOutputPartitioning default — and pays columnar
+    // encode/decode; the pin was ~1.4× faster at sf0.1), and it backs
+    // the returned frame.
+    val tf = pin(toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    // r16: the corpus-size scalar rides the final job as a one-row
-    // broadcast instead of an eager df.count() — one driver-blocking
-    // action (checkpoint) per call instead of two, and one fewer full
-    // scan of the input standing alone.
+    // the corpus-size scalar rides the final job as a one-row broadcast
+    // instead of an eager df.count() — one driver-blocking action (the
+    // pin) per call instead of two, and one fewer full scan of the input
+    // standing alone.
     val nRow = df.agg(count(lit(1)).as("__n"))
     val scored = tf.join(broadcast(dfreq), "term")
       .crossJoin(broadcast(nRow))
@@ -209,17 +209,15 @@ object TextAnalysis {
       minCount: Long): org.apache.spark.sql.DataFrame = {
     val toks = df.select(TextOps.tokens(col(textCol)).as("t"))
     // both count tables feed the totals aggregation AND the joins below;
-    // materialize them once (they are vocabulary-/bigram-sized, tiny next
-    // to the corpus) so the tokenize+explode+shuffle doesn't run twice —
-    // eager checkpoint, same shape as tfIdfTopK's tf working set
-    val uni = toks.select(explode(col("t")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    val bi = toks.select(explode(TextOps.wordNgrams(col("t"), 2)).as("bg"))
+    // pin them once (they are vocabulary-/bigram-sized, tiny next to the
+    // corpus) so the tokenize+explode+shuffle doesn't run twice — same
+    // shape as tfIdfTopK's tf; both back the returned frame
+    val uni = pin(toks.select(explode(col("t")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c")))
+    val bi = pin(toks.select(explode(TextOps.wordNgrams(col("t"), 2)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("n"))
       .withColumn("a", split(col("bg"), " ").getItem(0))
-      .withColumn("b", split(col("bg"), " ").getItem(1))
-      .localCheckpoint(true)
+      .withColumn("b", split(col("bg"), " ").getItem(1)))
     val totals = uni.agg(sum("c").as("nn"))
       .crossJoin(bi.agg(sum("n").as("m")))
     bi.filter(col("n") >= minCount)
@@ -304,16 +302,14 @@ object TextAnalysis {
         .as("b"))
       .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2"))
     // small (distinct bigrams + per-token end-of-doc sentinels), three
-    // consumers — persist, released after the result materializes.
-    // r16 note: a single-tokenize-pass variant (aggregate per-(doc,
-    // bigram) multiplicities first, score distinct bigrams per doc)
-    // was built and MEASURED 1.5-2× slower at sf0.1: the (doc,w1,w2)
-    // shuffle + persist costs more than the second tokenize pass it
-    // saves, and AQE already turns the occurrence-level scoring join
-    // into a broadcast. Rejected; the two-pass shape stands (the r11
-    // measurement holds).
+    // consumers — a working set, released after the result is pinned.
+    // A single-tokenize-pass variant (aggregate per-(doc, bigram)
+    // multiplicities first, score distinct bigrams per doc) measured
+    // 1.5-2× slower at sf0.1: the (doc,w1,w2) shuffle + persist costs
+    // more than the second tokenize pass it saves, and AQE already turns
+    // the occurrence-level scoring join into a broadcast. The two-pass
+    // shape stands.
     val counts = stream.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vocab = counts.agg(countDistinct("w1").as("v"))
     val ctx = counts.filter(col("w2").isNotNull)
       .groupBy("w1").agg(sum("c").as("ctx"))
@@ -329,9 +325,7 @@ object TextAnalysis {
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"),
         round(-(sum("lp").cast("double")) / count(lit(1)), 6).as("avg_nll"))
-      .localCheckpoint(true)
-    counts.unpersist(false)
-    out
+    using(counts)(pin(out))
   }
 
   /** Byte-pair-encoding merge training (Sennrich et al. 2016) on the
@@ -344,9 +338,8 @@ object TextAnalysis {
     * every merge iteration then runs on the bounded vocabulary table.
     * Merges are inherently sequential — each changes the next iteration's
     * pair counts — so the loop drives from the coordinator, collecting
-    * exactly ONE row (the argmax pair) per step; per-round lineage is cut
-    * with an eager localCheckpoint and the previous round's blocks are
-    * released (the connectedComponents discipline).
+    * exactly ONE row (the argmax pair) per step; each round is pinned
+    * and the previous round's blocks are released.
     *
     * Merge application is classic greedy left-to-right: expressed as a
     * string-accumulator fold, where an accumulator ending in the left
@@ -356,25 +349,20 @@ object TextAnalysis {
   def bpeTrain(df: DataFrame, textCol: String, merges: Int): DataFrame = {
     val session = df.sparkSession
     import session.implicits._
-    // the ONLY corpus-scale pass: eager-checkpointed so no round can
-    // ever re-tokenize the corpus
-    val initial = df
+    // the ONLY corpus-scale pass: pinned so no round can ever
+    // re-tokenize the corpus
+    var words = pin(df
       .select(explode(TextOps.tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(concat_ws(" ", split(col("w"), "")).as("sym"), col("cnt"))
-      .localCheckpoint(true)
-    var words = initial
-    // r15: each round's folded dictionary is a LAZY persist, not an
-    // eager localCheckpoint — the next round's argmax aggregate is the
-    // action that materializes it, so every merge round costs exactly
-    // ONE driver-blocking job instead of two (checkpoint + argmax).
-    // The previous round's cache is released only after the argmax has
-    // landed the new one. Note (ADVICE r15): because each previous
-    // round is unpersisted once the next materializes, EVICTION of the
-    // current round's cache replays the whole merge chain from the
-    // initial checkpoint — a cost (not correctness) risk that the
-    // bounded vocabulary table keeps negligible here; pin the last two
-    // rounds instead if deep recompute ever matters.
+      .select(concat_ws(" ", split(col("w"), "")).as("sym"), col("cnt")))
+    // each round's folded dictionary is a LAZY pin: the next round's
+    // argmax aggregate is the action that materializes it, so every
+    // merge round costs exactly ONE driver-blocking job instead of two
+    // (checkpoint + argmax). The previous round is released only after
+    // that argmax has landed the new one. A materialized round never
+    // replays the merge chain: its lineage is cut at that job, and its
+    // memory-and-disk blocks spill to disk under memory pressure
+    // instead of being dropped.
     var pending: DataFrame = null
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
@@ -382,7 +370,7 @@ object TextAnalysis {
     while (step <= merges && !exhausted) {
       // split bound as a lambda variable — one split of the symbol
       // string per row instead of one in the filter and one in the
-      // generate (r16; the bigramNll note)
+      // generate (the bigramNll note)
       val best = words
         .select(col("cnt"), explode(flatten(transform(
           array(split(col("sym"), " ")), t =>
@@ -398,25 +386,21 @@ object TextAnalysis {
         .limit(1).collect()
       // the argmax above materialized `words` — the round before it
       // can go now
-      if (pending != null) { pending.unpersist(false); pending = null }
+      if (pending != null) { release(pending); pending = null }
       if (best.isEmpty) exhausted = true
       else {
         val (l, r, c) = (best.head.getString(0), best.head.getString(1),
           best.head.getLong(2))
         learned += ((step, l, r, c))
         pending = words
-        words = words.select(
-          mergeFold(col("sym"), l, r).as("sym"),
-          col("cnt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        words = pin(words.select(mergeFold(col("sym"), l, r).as("sym"),
+          col("cnt")), eager = false)
         step += 1
       }
     }
-    val out = learned.toSeq.toDF("step", "left", "right", "cnt")
-    words.unpersist(false)
-    if (pending != null) pending.unpersist(false)
-    org.apache.spark.sql.graftbridge.CheckpointBridge.release(initial)
-    out
+    release(words)
+    if (pending != null) release(pending)
+    learned.toSeq.toDF("step", "left", "right", "cnt")
   }
 
   /** Conjunctive (AND) term search: documents containing EVERY query

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.WorkingSet
 
 /** Time-series regularization over event streams: fixed-step resampling
   * with gap-fill and forward-fill — the prep step that turns an
@@ -45,15 +46,14 @@ object TimeSeries {
     // grid output stays a lazy plan (checkpointing the grid itself would
     // eagerly pin the largest frame in the pipeline; this is the one
     // pinned copy, the pageRank/minhash contract)
-    val obs = df
+    val obs = WorkingSet.pin(df
       .filter(col(keyCol).isNotNull && col(tsCol).isNotNull)
       .select(col(keyCol).as("__k"),
         (floor(unix_timestamp(col(tsCol)) / step) * step).cast("long")
           .as("__b"),
         col(valueCol).as("__v"))
       .groupBy("__k", "__b")
-      .agg(cast_sum(col("__v")).as("observed"))
-      .localCheckpoint(true)
+      .agg(cast_sum(col("__v")).as("observed")))
     // global bounds: a one-row frame, broadcast into the grid join
     val bounds = obs.agg(min("__b").as("__lo"), max("__b").as("__hi"))
     val grid = obs.select(col("__k")).distinct()

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.WorkingSet.{pin, release, using}
+import graft.operators.Dedup
 
 /** Structured-Streaming ingest facade — the Spark-native equivalent of
   * Hive's transactional streaming ingest API (reference:
@@ -300,15 +302,20 @@ object Ingest {
     * sketched, probed against the index, and only documents with no
     * near-dup (jaccard ≥ threshold) in the index are appended to the
     * endpoint's table. `growIndex = true` also folds every batch's OWN
-    * sketches into the (in-memory) index, so later batches dedup against
-    * earlier ones too — the continuous-crawl shape, where the corpus
-    * only ever grows by novel documents.
+    * sketches into the (in-memory) index held by `index`, so later
+    * batches dedup against earlier ones too — the continuous-crawl shape,
+    * where the corpus only ever grows by novel documents.
     *
-    * Scale notes: the index frames are the caller's (persist or
-    * parquet-backed); per batch the work is O(batch + matched buckets),
-    * identical to the batch prober. Growth is by plan union, so for very
-    * long streams compact periodically (write the index to parquet and
-    * restart from the re-read frames — plan depth resets to 1).
+    * Residency: each batch's working frames are released once its append
+    * is written; the only blocks a batch leaves behind are its novel
+    * documents' sketches, pinned into the grown index (free them with
+    * `WorkingSet.release` on the index frames once the stream is done).
+    * Scale notes: the starting index frames are the caller's (scoped
+    * working set or parquet-backed); per batch the work is O(batch +
+    * matched buckets), identical to the batch prober. Growth is by plan
+    * union, so for very long streams compact periodically (write
+    * `index.get()` to parquet and restart from the re-read frames — plan
+    * depth resets to 1).
     * Exactly-once: the checkpoint replays
     * a crashed batch, and re-appending a filtered batch is idempotent
     * only if the downstream table dedups — pair with `startUpsert` or an
@@ -318,48 +325,49 @@ object Ingest {
       ep: Endpoint,
       idCol: String,
       textCol: String,
-      index: graft.operators.Dedup.MinHashIndex,
+      index: java.util.concurrent.atomic.AtomicReference[Dedup.MinHashIndex],
       threshold: Double = 0.5,
       maxBucket: Int = 1000,
       growIndex: Boolean = true,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // the growing index is session state, swapped under a lock per batch
-    // (micro-batches of one query never overlap, but the lock keeps the
-    // handoff safe if two queries share an index by mistake)
-    val ref = new java.util.concurrent.atomic.AtomicReference(index)
+    // the growing index is session state, swapped per batch (micro-batches
+    // of one query never overlap; the atomic handoff keeps it safe if two
+    // queries share an index by mistake)
     stream.writeStream
       .option("checkpointLocation", ep.checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val idx = ref.get()
+        val idx = index.get()
         // same-batch duplicates are the common case in a continuous crawl:
         // self-dedup the batch first (canonical smallest-id keep per
         // near-dup cluster) — probing only batch-vs-index would admit
         // every intra-batch copy as "novel"
-        val selfPairs = graft.operators.Dedup.minhashNearDups(
-          batch, idCol, textCol,
+        val selfPairs = Dedup.minhashNearDups(batch, idCol, textCol,
           idx.shingleSize, idx.numHashes, idx.bands, threshold, maxBucket)
-        val selfDeduped = graft.operators.Dedup.dedupByCluster(
+        val selfDeduped = Dedup.dedupByCluster(
           batch, idCol, selfPairs, "id_a", "id_b")
-        val dups = graft.operators.Dedup
+        val dups = Dedup
           .minhashAgainstIndex(selfDeduped, idCol, textCol, idx, threshold,
             maxBucket)
           .select(col("new_id").as(idCol)).distinct()
-        val novel = selfDeduped.join(dups, Seq(idCol), "left_anti")
-          .localCheckpoint(true)
+        val novel = pin(selfDeduped.join(dups, Seq(idCol), "left_anti"))
         if (spark.catalog.tableExists(ep.table))
           novel.write.mode("append").saveAsTable(ep.table)
         else novel.write.saveAsTable(ep.table)
         if (growIndex && !novel.isEmpty) {
-          val add = graft.operators.Dedup
-            .buildMinhashIndex(novel, idCol, textCol,
-              idx.shingleSize, idx.numHashes, idx.bands)
-          ref.set(idx.copy(
-            shingled = idx.shingled.unionByName(add.shingled),
-            banded = idx.banded.unionByName(add.banded)))
+          // the batch's sketches outlive `novel`, so they are pinned
+          val add = Dedup.buildMinhashIndex(novel, idCol, textCol,
+            idx.shingleSize, idx.numHashes, idx.bands)
+          val (shingled, banded) = using(add.shingled) {
+            (pin(add.shingled), pin(add.banded))
+          }
+          index.set(idx.copy(
+            shingled = idx.shingled.unionByName(shingled),
+            banded = idx.banded.unionByName(banded)))
         }
-        ()
+        // release(selfDeduped) frees the cluster labels it reads
+        Seq(novel, dups, selfDeduped, selfPairs).foreach(release)
       }
       .start()
   }

@@ -103,14 +103,14 @@ class PlanSpec extends SparkSpec {
   test("dedup candidate generation shuffles on band keys, not row data") {
     // the minhash pipeline's only wide exchanges are on (band, key) and the
     // id-pair join — the shingle arrays never shuffle with the full rows.
-    // Inspect the lazy pipeline (the public wrapper checkpoints eagerly,
+    // Inspect the lazy pipeline (the public wrapper pins its result,
     // truncating the plan to a Scan ExistingRDD).
-    val (df, release) = graft.operators.Dedup.minhashPipeline(
-      Tables.load(spark, dir, "documents"), "doc_id", "text",
-      shingleSize = 3, numHashes = 64, bands = 16,
-      threshold = 0.5, maxBucket = 1000)
-    val p = df.queryExecution.executedPlan.toString
-    release()
+    val idx = graft.operators.Dedup.buildMinhashIndex(
+      Tables.load(spark, dir, "documents"), "doc_id", "text")
+    val p = WorkingSet.using(idx.shingled, idx.banded) {
+      graft.operators.Dedup.minhashPipeline(idx, threshold = 0.5,
+        maxBucket = 1000).queryExecution.executedPlan.toString
+    }
     assert(p.contains("Exchange"), "banding is a shuffle by design")
   }
 
@@ -391,9 +391,10 @@ class PlanSpec extends SparkSpec {
 
   test("setsim exact join: candidate stage is an equi-join on prefix " +
     "tokens, never a nested loop") {
-    val (pairs, release) = graft.operators.SetSim.jaccardPipeline(
-      Tables.load(spark, dir, "documents"), "doc_id", "text", 0.5, 0)
-    try {
+    val ordered = graft.operators.SetSim.orderedTokens(
+      Tables.load(spark, dir, "documents"), "doc_id", "text")
+    WorkingSet.using(ordered) {
+      val pairs = graft.operators.SetSim.jaccardPipeline(ordered, 0.5, 0)
       pairs.collect() // finalize AQE
       val p = pairs.queryExecution.executedPlan.toString
       // the size filter rides the token equi-join as a post-condition;
@@ -402,6 +403,92 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"),
         s"setsim candidate join must stay equi:\n$p")
-    } finally release()
+    }
+  }
+
+  test("working-set residency: no registry query leaves orphaned " +
+    "persisted blocks once its result is consumed") {
+    // each query's result is consumed the way Bench does (noop sink);
+    // every RDD persisted since the query started must be reachable from
+    // the returned frame (a pin it reads, a cached relation in its plan)
+    // or already released. The reachable pins are then released.
+    val orphaned = Queries.all.flatMap { q =>
+      val before = Residency.resident(spark)
+      val df = q.run(spark, dir)
+      df.write.format("noop").mode("overwrite").save()
+      val orphans = Residency.orphans(spark, before, df)
+      WorkingSet.release(df)
+      if (orphans.isEmpty) None
+      else Some(s"${q.name}: ${orphans.size} orphaned RDD(s)")
+    }
+    assert(orphaned.isEmpty, orphaned.mkString("\n"))
+  }
+
+  test("tokenize-once: every tokenize/shingle expression is evaluated " +
+    "once per row in the executed plans of the text operators") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, StringSplit}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    object Walk extends AdaptiveSparkPlanHelper
+    // the operators bind each tokenize as a lambda variable; a plain
+    // alias + filter(size(...)) would be inlined by the optimizer into
+    // both the Filter and the Generate, so the same split/shingle
+    // expression would appear (and run) twice in one plan. A cached
+    // relation's build plan is checked as a plan of its own.
+    val captured = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = captured.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    spark.listenerManager.register(listener)
+    try {
+      for (q <- Seq("q145_chunk_overlap", "q166_bigram_lm",
+          "q168_shared_spans", "q187_containment")) {
+        val df = Queries.byName(q).run(spark, dir)
+        noop(df)
+        WorkingSet.release(df)
+      }
+      val idx = graft.operators.Dedup.buildMinhashIndex(
+        Tables.load(spark, dir, "documents"), "doc_id", "text")
+      WorkingSet.using(idx.shingled, idx.banded) {
+        noop(graft.operators.Dedup.minhashPipeline(idx, 0.5, 1000))
+      }
+      org.apache.spark.SpecBridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = Walk.collectWithSubqueries(p) {
+      case n => n
+    }
+    def withCacheBuilds(p: SparkPlan): Seq[SparkPlan] = p +: nodes(p).collect {
+      case s: InMemoryTableScanExec => s.relation.cacheBuilder.cachedPlan
+    }.flatMap(withCacheBuilds)
+    def tokenizes(es: Seq[Expression]): Seq[Expression] = es.flatMap(_.collect {
+      case e: StringSplit => e.canonicalized
+      case e: graft.functions.ShingleSet => e.canonicalized
+    })
+    import scala.jdk.CollectionConverters._
+    // each tokenize must occur once in its plan — not once in a Filter
+    // and again in the Project or Generate above it. A scan's
+    // DataFilters only prune files, so they don't count.
+    val checked = for {
+      p <- captured.asScala.toSeq.flatMap(withCacheBuilds)
+      all = tokenizes(nodes(p).flatMap {
+        case _: FileSourceScanExec => Nil
+        case n => n.expressions
+      })
+      e <- all.distinct
+    } yield (e, all.count(_ == e), p)
+    assert(checked.size >= 5, s"expected tokenizing plans, got ${checked.size}")
+    val twice = checked.filter(_._2 != 1)
+    assert(twice.isEmpty, twice.map { case (e, n, p) =>
+      s"${e.prettyName} evaluated ${n}× in one plan:\n${p.treeString.take(3000)}"
+    }.mkString("\n"))
   }
 }

@@ -309,36 +309,56 @@ class StreamingSpec extends SparkSpec {
     val corpusText = "the quick brown fox jumps over the lazy dog again and again"
     val novelA = "completely new material about distributed query planning today"
     val novelB = "another unrelated paragraph mentioning columnar storage formats"
+    val novelC = "a third fresh text on vectorized execution of window functions"
     val corpus = Seq((1L, corpusText)).toDF("id", "text")
-    val idx = Dedup.buildMinhashIndex(corpus, "id", "text")
+    val base = Dedup.buildMinhashIndex(corpus, "id", "text")
+    val idx = new java.util.concurrent.atomic.AtomicReference(base)
+    // batch working frames must be released once the batch is written;
+    // only the grown index may hold blocks (the caller's base index
+    // working set, the novel docs' pinned sketches)
+    def orphans(before: Set[Int]): Set[Int] =
+      Residency.orphans(spark, before, idx.get().shingled, idx.get().banded)
 
-    val input = MemoryStream[(Long, String)](spark, 7)
-    val stream = input.toDF().toDF("id", "text")
-    val table = s"dedup_append_${System.nanoTime()}"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val ep = Ingest.Endpoint(table, tmp("dedup-ckpt"))
-    val q = Ingest.startDedupedAppend(stream, ep, "id", "text", idx,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
-    def settled(b: => Boolean): Boolean =
-      try { spark.catalog.refreshTable(table); b }
-      catch { case _: Throwable => false }
+    WorkingSet.using(base.shingled, base.banded) {
+      val before = Residency.resident(spark)
+      val input = MemoryStream[(Long, String)](spark, 7)
+      val stream = input.toDF().toDF("id", "text")
+      val table = s"dedup_append_${System.nanoTime()}"
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      val ep = Ingest.Endpoint(table, tmp("dedup-ckpt"))
+      val q = Ingest.startDedupedAppend(stream, ep, "id", "text", idx,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
+      def settled(b: => Boolean): Boolean =
+        try { spark.catalog.refreshTable(table); b }
+        catch { case _: Throwable => false }
 
-    // batch 1: a copy of the indexed doc (dropped) + novel A (kept)
-    input.addData((10L, corpusText), (11L, novelA))
-    waitFor(spark.catalog.tableExists(table) &&
-      settled(spark.table(table).count() == 1))
-    assert(spark.table(table).collect().head.getLong(0) == 11L)
+      // batch 1: a copy of the indexed doc (dropped) + novel A (kept)
+      input.addData((10L, corpusText), (11L, novelA))
+      q.processAllAvailable()
+      waitFor(spark.catalog.tableExists(table) &&
+        settled(spark.table(table).count() == 1))
+      assert(spark.table(table).collect().head.getLong(0) == 11L)
+      assert(orphans(before).isEmpty, "batch 1 left working frames resident")
 
-    // batch 2: a copy of novel A (dropped — the index grew) + novel B
-    // arriving TWICE in the same batch (intra-batch self-dedup keeps the
-    // smallest id, no index entry exists for B yet)
-    input.addData((20L, novelA), (21L, novelB), (22L, novelB))
-    waitFor(settled(spark.table(table).count() == 2))
-    q.stop()
-    val ids = spark.table(table).collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids == Seq(11L, 21L), s"got $ids")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    idx.release()
+      // batch 2: a copy of novel A (dropped — the index grew) + novel B
+      // arriving TWICE in the same batch (intra-batch self-dedup keeps the
+      // smallest id, no index entry exists for B yet)
+      input.addData((20L, novelA), (21L, novelB), (22L, novelB))
+      q.processAllAvailable()
+      waitFor(settled(spark.table(table).count() == 2))
+
+      // batch 3: copies of A and B (dropped) + novel C
+      input.addData((30L, novelA), (31L, novelB), (32L, novelC))
+      q.processAllAvailable()
+      waitFor(settled(spark.table(table).count() == 3))
+      q.stop()
+      val ids = spark.table(table).collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == Seq(11L, 21L, 32L), s"got $ids")
+      assert(orphans(before).isEmpty, "batch 3 left working frames resident")
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+    WorkingSet.release(idx.get().shingled)
+    WorkingSet.release(idx.get().banded)
   }
 
   test("streaming upsert keeps latest row per key across batches") {

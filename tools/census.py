@@ -109,6 +109,33 @@ for doc in ("README.md", "COVERAGE.md", "SURVEY.md"):
           "test registration count")
 print(f"test registrations: {test_regs}")
 
+# Working-set lifecycle: persist, checkpoint and release go through
+# graft/WorkingSet.scala only (scoped working set, iterate round, result
+# pin), so no operator can again decide on its own when blocks may be
+# dropped. Each allowlisted call site carries its reason.
+LIFECYCLE = re.compile(r"\.(?:persist|localCheckpoint|checkpoint|unpersist|"
+                       r"cache|cacheTable|uncacheTable)\(|CheckpointBridge")
+LIFECYCLE_ALLOWED = {
+    ("GraftSession.scala", "spark.catalog.cacheTable(name)"):
+        "FROM-source temp view that already exists: cached in place, "
+        "under its catalog name",
+    ("GraftSession.scala", "spark.catalog.uncacheTable(name)"):
+        "releases the in-place cacheTable above",
+}
+for path in sorted(glob.glob(os.path.join(SRC, "**", "*.scala"),
+                             recursive=True)):
+    base = os.path.basename(path)
+    if base == "WorkingSet.scala":
+        continue
+    for n, line in enumerate(open(path, encoding="utf-8"), 1):
+        code = line.split("//")[0]
+        if code.lstrip().startswith("*") or not LIFECYCLE.search(code):
+            continue
+        if not any(base == f and snippet in code
+                   for f, snippet in LIFECYCLE_ALLOWED):
+            drift.append(f"{os.path.relpath(path, REPO)}:{n}: raw working-set "
+                         f"lifecycle call outside WorkingSet: {line.strip()}")
+
 for d in drift:
     print("DRIFT:", d)
 
