@@ -104,30 +104,14 @@ object Macros {
   private val DropRe =
     """(?is)\s*DROP\s+TEMPORARY\s+MACRO\s+(IF\s+EXISTS\s+)?(\w+)\s*""".r
 
-  /** Split a parameter list on commas at nesting depth 0 only, so both
-    * `a DECIMAL(12,2), b INT` and `m MAP<STRING,INT>, s STRUCT<a:INT,b:STRING>`
-    * yield the right declarations. Angle brackets only ever appear in type
-    * syntax inside a parameter list, so counting them as nesting is safe. */
-  private def splitParams(s: String): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    s.foreach {
-      case c @ ('(' | '<') => depth += 1; cur += c
-      case c @ (')' | '>') => depth -= 1; cur += c
-      case ',' if depth == 0 => out += cur.result(); cur.clear()
-      case c => cur += c
-    }
-    out += cur.result()
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Front-door for the Hive statement forms themselves (Spark's parser does
     * not accept them): `CREATE TEMPORARY MACRO name(a TYPE, b TYPE) body`
     * and `DROP TEMPORARY MACRO [IF EXISTS] name`. */
   def sql(spark: SparkSession, stmt: String): Unit = stmt match {
     case CreateRe(name, paramList, body) =>
-      val params = splitParams(paramList).map { decl =>
+      // type syntax nests <…>: `m MAP<STRING,INT>, s STRUCT<a:INT,b:STRING>`
+      val decls = graft.HiveQlText(paramList).split(',', types = true)
+      val params = decls.map { decl =>
         val parts = decl.split("\\s+", 2)
         require(parts.length == 2,
           s"macro parameter needs 'name TYPE', got '$decl'")

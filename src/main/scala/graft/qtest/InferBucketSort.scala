@@ -1,5 +1,7 @@
 package graft.qtest
 
+import graft.HiveQlText
+
 /** Clean-room model of Hive's bucket/sort inference for written
   * partitions (`hive.exec.infer.bucket.sort`, ref
   * ql/optimizer/physical/BucketingSortingInferenceOptimizer.java +
@@ -43,43 +45,40 @@ object InferBucketSort {
   /** Rebuild a multi-insert branch ("SELECT … GROUP BY …", no FROM)
     * into a standalone block with the statement's common FROM text. */
   def spliceFrom(branch: String, fromText: String): String = {
-    val up = branch.toUpperCase
-    val cut = topLevelKeyword(up, Seq("WHERE", "GROUP BY", "DISTRIBUTE BY",
-      "SORT BY", "ORDER BY", "CLUSTER BY", "LIMIT"))
-      .map(_._1).getOrElse(branch.length)
+    val cut = HiveQlText(branch).firstKeyword("WHERE", "GROUP BY",
+      "DISTRIBUTE BY", "SORT BY", "ORDER BY", "CLUSTER BY", "LIMIT")
+      .getOrElse(branch.length)
     s"${branch.substring(0, cut)} FROM $fromText ${branch.substring(cut)}"
   }
 
   // positions are 0-based select-output positions
   private def inferBlock(sel0: String): Option[(Seq[Int], Seq[(Int, Int)])] = {
     val sel = sel0.trim
-    val up = sel.toUpperCase
-    if (!up.startsWith("SELECT")) return None
-    val fromAt = topLevelKeyword(up, Seq("FROM")).map(_._1)
-      .getOrElse(return None)
+    if (!sel.toUpperCase.startsWith("SELECT")) return None
+    val fromAt = HiveQlText(sel).firstKeyword("FROM").getOrElse(return None)
     val selectList = sel.substring("SELECT".length, fromAt)
     if (selectList.toUpperCase.contains("TRANSFORM")) return None
     val mapJoinHint =
       """(?is)/\*\+\s*MAPJOIN[^*]*\*/""".r.findFirstIn(selectList).isDefined
-    val outputs = splitTop(
-      """(?is)/\*\+[^*]*\*/""".r.replaceAllIn(selectList, ""), ',')
+    val outputs = HiveQlText(
+      """(?is)/\*\+[^*]*\*/""".r.replaceAllIn(selectList, "")).split(',')
       .map(parseOutput)
     val rest = sel.substring(fromAt + 4)
-    val restUp = rest.toUpperCase
+    val restText = HiveQlText(rest)
 
     // trailing clause spans (top-level, first occurrence each)
     def clause(kw: String): Option[String] =
-      topLevelKeyword(restUp, Seq(kw)).map { case (i, _) =>
+      restText.firstKeyword(kw).map { i =>
         val from = i + kw.length
-        val end = topLevelKeyword(restUp.substring(from),
-          Seq("WHERE", "GROUP BY", "DISTRIBUTE BY", "SORT BY", "ORDER BY",
-            "CLUSTER BY", "LIMIT", "WITH ROLLUP", "WITH CUBE",
-            "GROUPING SETS")).map(_._1 + from).getOrElse(rest.length)
+        val end = HiveQlText(rest.substring(from)).firstKeyword("WHERE",
+          "GROUP BY", "DISTRIBUTE BY", "SORT BY", "ORDER BY", "CLUSTER BY",
+          "LIMIT", "WITH ROLLUP", "WITH CUBE", "GROUPING SETS")
+          .map(_ + from).getOrElse(rest.length)
         rest.substring(from, end).trim
       }
     val groupBy = clause("GROUP BY")
-    val rollup = topLevelKeyword(restUp,
-      Seq("WITH ROLLUP", "WITH CUBE", "GROUPING SETS")).isDefined
+    val rollup = restText.firstKeyword("WITH ROLLUP", "WITH CUBE",
+      "GROUPING SETS").isDefined
     val distBy = clause("DISTRIBUTE BY")
     val sortBy = clause("SORT BY")
     val orderBy = clause("ORDER BY")
@@ -90,7 +89,7 @@ object InferBucketSort {
       if (pos.forall(_.isDefined)) Some(pos.flatten) else None
     }
     def sortKeys(text: String): Seq[(String, Int)] =
-      splitTop(text, ',').map { k =>
+      HiveQlText(text).split(',').map { k =>
         val t = k.trim
         val up2 = t.toUpperCase
         if (up2.endsWith(" DESC")) (t.dropRight(5).trim, 0)
@@ -103,39 +102,37 @@ object InferBucketSort {
       val t = rest.trim
       if (!t.startsWith("(")) None
       else {
-        val close = matchingParen(t, 0)
-        if (close < 0) None
-        else {
-          val afterUp = t.substring(close + 1).toUpperCase
-          // an outer JOIN after the subquery is its own reduce — not
-          // plain propagation (not exercised by the covered goldens)
-          if (topLevelKeyword(afterUp, Seq(" JOIN ")).isDefined) None
-          else inferBlock(t.substring(1, close)).flatMap {
-            case (ibPos, isPos) =>
-              // map inner output POSITIONS to outer positions via the
-              // inner output NAME appearing as the outer expr's base
-              val innerOuts = innerOutputNames(t.substring(1, close))
-              def outer(p: Int): Option[Int] =
-                innerOuts.lift(p).flatten.flatMap { n =>
-                  val i = outputs.indexWhere(o =>
-                    lastIdent(o.expr).contains(n) || o.name.contains(n))
-                  if (i >= 0) Some(i) else None
-                }
-              val b = ibPos.map(outer)
-              val s = isPos.map { case (p, o) => (outer(p), o) }
-              if (b.forall(_.isDefined) && s.forall(_._1.isDefined))
-                Some((b.flatten, s.map { case (p, o) => (p.get, o) }))
-              else None
-          }
+        // the statement already ran, so its parens balance
+        val close = HiveQlText(t).matchParen(0)
+        // an outer JOIN after the subquery is its own reduce — not
+        // plain propagation (not exercised by the covered goldens)
+        if (HiveQlText(t.substring(close + 1)).firstKeyword("JOIN").isDefined)
+          None
+        else inferBlock(t.substring(1, close)).flatMap {
+          case (ibPos, isPos) =>
+            // map inner output POSITIONS to outer positions via the
+            // inner output NAME appearing as the outer expr's base
+            val innerOuts = innerOutputNames(t.substring(1, close))
+            def outer(p: Int): Option[Int] =
+              innerOuts.lift(p).flatten.flatMap { n =>
+                val i = outputs.indexWhere(o =>
+                  lastIdent(o.expr).contains(n) || o.name.contains(n))
+                if (i >= 0) Some(i) else None
+              }
+            val b = ibPos.map(outer)
+            val s = isPos.map { case (p, o) => (outer(p), o) }
+            if (b.forall(_.isDefined) && s.forall(_._1.isDefined))
+              Some((b.flatten, s.map { case (p, o) => (p.get, o) }))
+            else None
         }
       }
     }
 
     if (clusterBy.isDefined)
-      mapAll(splitTop(clusterBy.get, ',').map(_.trim))
+      mapAll(HiveQlText(clusterBy.get).split(','))
         .map(p => (p, p.map((_, 1))))
     else if (distBy.isDefined || sortBy.isDefined) {
-      val dPos = distBy.map(d => mapAll(splitTop(d, ',').map(_.trim)))
+      val dPos = distBy.map(d => mapAll(HiveQlText(d).split(',')))
       val sk = sortBy.map(sortKeys).getOrElse(Nil)
       val sPos = sk.map { case (k, o) => (matchPos(outputs, k), o) }
       if (dPos.exists(_.isEmpty)) return None
@@ -168,23 +165,23 @@ object InferBucketSort {
       // when the select carries it; without it the plain keys still
       // bucket (the script comments say otherwise but the goldens pin
       // [key, value] — infer_bucket_sort_grouping_operators.q.out)
-      val base = splitTop(groupBy.get, ',').map(_.trim).filter(_.nonEmpty)
+      val base = HiveQlText(groupBy.get).split(',')
       val withId =
         if (rollup) mapAll(base :+ "GROUPING__ID") else None
       withId.orElse(mapAll(base)).map(p => (p, p.map((_, 1))))
     } else {
       // join: first top-level ON clause's equi-conditions
-      val joinAt = topLevelKeyword(restUp, Seq(" JOIN "))
+      val joinAt = restText.firstKeyword("JOIN")
       if (joinAt.isDefined && !mapJoinHint) {
-        val onAt = topLevelKeyword(
-          restUp.substring(joinAt.get._1), Seq(" ON "))
-        onAt.flatMap { case (i, _) =>
-          val from = joinAt.get._1 + i + 2 // past the trimmed "ON"
-          val end = topLevelKeyword(restUp.substring(from),
-            Seq(" JOIN ", "WHERE", "GROUP BY", "LIMIT"))
-            .map(_._1 + from).getOrElse(rest.length)
+        val onAt = HiveQlText(rest.substring(joinAt.get)).firstKeyword("ON")
+        onAt.flatMap { i =>
+          val from = joinAt.get + i + 2 // past "ON"
+          val end = HiveQlText(rest.substring(from))
+            .firstKeyword("JOIN", "WHERE", "GROUP BY", "LIMIT")
+            .map(_ + from).getOrElse(rest.length)
           var cond = rest.substring(from, end).trim
-          if (cond.startsWith("(") && matchingParen(cond, 0) == cond.length - 1)
+          if (cond.startsWith("(") &&
+              HiveQlText(cond).matchParen(0) == cond.length - 1)
             cond = cond.substring(1, cond.length - 1)
           val pairs = cond.split("(?i)\\bAND\\b").map(_.trim).toSeq
           val pos = pairs.map { p =>
@@ -225,11 +222,10 @@ object InferBucketSort {
   /** Output names a containing query can reference: alias, else the
     * last identifier of a plain column ref. */
   private def innerOutputNames(sel: String): Seq[Option[String]] = {
-    val up = sel.trim.toUpperCase
-    if (!up.startsWith("SELECT")) return Nil
-    val fromAt = topLevelKeyword(up, Seq("FROM")).map(_._1)
-      .getOrElse(return Nil)
-    splitTop(sel.trim.substring("SELECT".length, fromAt), ',')
+    val t = sel.trim
+    if (!t.toUpperCase.startsWith("SELECT")) return Nil
+    val fromAt = HiveQlText(t).firstKeyword("FROM").getOrElse(return Nil)
+    HiveQlText(t.substring("SELECT".length, fromAt)).split(',')
       .map(parseOutput)
       .map(o => o.name.orElse(lastIdent(o.expr)))
   }
@@ -253,67 +249,4 @@ object InferBucketSort {
 
   private def lastIdentOf(k: String): Option[String] =
     if (k.matches("[\\w.]+")) Some(k.split('.').last) else None
-
-  /** First top-level (outside quotes/parens) occurrence of any keyword;
-    * returns (index, keyword). Keywords with spaces match literally;
-    * word boundaries enforced. */
-  private def topLevelKeyword(up: String, kws: Seq[String])
-      : Option[(Int, String)] = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < up.length) {
-      val c = up.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '\'' || c == '"') quote = c
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0) {
-        kws.foreach { kw =>
-          val t = kw.trim
-          if (up.regionMatches(i, t, 0, t.length) &&
-              (i == 0 || !Character.isLetterOrDigit(up.charAt(i - 1)) &&
-                up.charAt(i - 1) != '_') &&
-              (i + t.length >= up.length ||
-                !Character.isLetterOrDigit(up.charAt(i + t.length)) &&
-                up.charAt(i + t.length) != '_'))
-            return Some((i, kw))
-        }
-      }
-      i += 1
-    }
-    None
-  }
-
-  private def splitTop(s: String, delim: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { c =>
-      if (quote != 0) { cur += c; if (c == quote) quote = 0 }
-      else if (c == '\'' || c == '"') { quote = c; cur += c }
-      else if (c == '(') { depth += 1; cur += c }
-      else if (c == ')') { depth -= 1; cur += c }
-      else if (c == delim && depth == 0) { out += cur.toString; cur.clear() }
-      else cur += c
-    }
-    out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
-  private def matchingParen(s: String, open: Int): Int = {
-    var depth = 0
-    var quote: Char = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '\'' || c == '"') quote = c
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
 }

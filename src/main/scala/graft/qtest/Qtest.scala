@@ -21,54 +21,16 @@ object Qtest {
 
   // -- .q script splitting ---------------------------------------------
 
-  /** Split a HiveQL script into statements on top-level semicolons.
-    * Quote-aware ('…' and "…", with backslash escapes) and
-    * comment-aware (`-- …` to end of line). Pure-comment/empty
-    * fragments are dropped, but comments attached to a statement are
-    * preserved (the reference echoes them into the golden file). */
-  def splitStatements(script: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < script.length) {
-      val c = script.charAt(i)
-      if (quote != 0) {
-        cur += c
-        if (c == '\\' && i + 1 < script.length) { i += 1; cur += script.charAt(i) }
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') { quote = c; cur += c }
-      else if (c == '-' && i + 1 < script.length && script.charAt(i + 1) == '-') {
-        while (i < script.length && script.charAt(i) != '\n') { cur += script.charAt(i); i += 1 }
-        if (i < script.length) cur += '\n'
-      } else if (c == ';') { out += cur.toString; cur.clear() }
-      else cur += c
-      i += 1
-    }
-    out += cur.toString
-    out.map(_.trim).filter(s => stripComments(s).trim.nonEmpty).toSeq
-  }
+  /** Split a HiveQL script into statements on the semicolons in code
+    * (graft.HiveQlText). Pure-comment/empty fragments are dropped, but
+    * comments attached to a statement are preserved (the reference
+    * echoes them into the golden file). */
+  def splitStatements(script: String): Seq[String] =
+    graft.HiveQlText(script).statements.map(_.trim)
+      .filter(s => stripComments(s).trim.nonEmpty)
 
-  /** Drop `-- …` comment text (quote-aware). */
-  def stripComments(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        sb += c
-        if (c == '\\' && i + 1 < s.length) { i += 1; sb += s.charAt(i) }
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') { quote = c; sb += c }
-      else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
-        while (i < s.length && s.charAt(i) != '\n') i += 1
-        i -= 1
-      } else sb += c
-      i += 1
-    }
-    sb.toString
-  }
+  /** Drop comment text, literals untouched. */
+  def stripComments(s: String): String = graft.HiveQlText(s).stripComments
 
   /** Whitespace-collapsed comment-free form, for statement↔golden-echo
     * alignment checks. */

@@ -1,5 +1,6 @@
 package graft.qtest
 
+import graft.HiveQlText
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -410,42 +411,6 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     oct.replace("\\;", ";").replace("\\\\", "\\")
   }
 
-  /** Split a Hive column-def list on top-level commas. */
-  private def splitCols(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var quote: Char = 0; val cur = new StringBuilder
-    s.foreach { c =>
-      if (quote != 0) { cur += c; if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c; cur += c
-        case '(' | '<' => depth += 1; cur += c
-        case ')' | '>' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
-        case _ => cur += c
-      }
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.toSeq
-  }
-
-  /** Find the column-def body: chars of `rest` up to the matching ')'
-    * of the CREATE TABLE '(' already consumed, returning (body, tail). */
-  private def splitAtMatchingParen(rest: String): (String, String) = {
-    var depth = 1; var i = 0; var quote: Char = 0
-    while (i < rest.length && depth > 0) {
-      val c = rest.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    (rest.substring(0, i - 1), rest.substring(i))
-  }
-
   /** Hive-1.2 CTAS derived column names (SemanticAnalyzer.genSelectPlan
     * autogen aliases + the CBO path's CTAS field derivation, pinned by
     * ctas_colname.q and parquet_ctas.q goldens):
@@ -463,32 +428,14 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     * modeled forms (caller falls back to positional naming). */
   private[qtest] def hiveCtasColNames(select: String,
       cols: Seq[String]): Option[Seq[String]] = {
-    def topFromSplit(s: String): Option[(String, String)] = {
-      var depth = 0; var quote: Char = 0; var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (quote != 0) { if (c == quote) quote = 0 }
-        else c match {
-          case '\'' | '"' => quote = c
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case 'f' | 'F' if depth == 0 && i + 4 <= s.length &&
-              s.substring(i, i + 4).equalsIgnoreCase("from") &&
-              (i == 0 || s.charAt(i - 1).isWhitespace) &&
-              (i + 4 == s.length || s.charAt(i + 4).isWhitespace ||
-                s.charAt(i + 4) == '(') =>
-            return Some((s.substring(0, i), s.substring(i + 4)))
-          case _ =>
-        }
-        i += 1
-      }
-      None
-    }
     def parseItems(sel: String): Option[(Seq[String], String)] =
       """(?is)\Aselect\s+(?:distinct\s+)?(.*)\z""".r
         .findFirstMatchIn(sel.trim)
-        .flatMap(m => topFromSplit(m.group(1)))
-        .map { case (items, from) => (splitCols(items), from) }
+        .flatMap { m =>
+          val s = m.group(1)
+          HiveQlText(s).firstKeyword("from")
+            .map(i => (HiveQlText(s.substring(0, i)).split(','), s.substring(i + 4)))
+        }
     def isStar(it: String) =
       it.trim == "*" || it.trim.matches("""(?s)`?\w+`?\s*\.\s*\*""")
     def validIdent(c: String) = c.matches("[A-Za-z_][A-Za-z0-9_]*")
@@ -511,24 +458,9 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
       }
       Some(out.toSeq)
     }
-    def hasTopLevelGroupBy(s: String): Boolean = {
-      var depth = 0; var quote: Char = 0; var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (quote != 0) { if (c == quote) quote = 0 }
-        else c match {
-          case '\'' | '"' => quote = c
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case 'g' | 'G' if depth == 0 &&
-              s.substring(i).matches("""(?is)group\s+by\b.*""") =>
-            return true
-          case _ =>
-        }
-        i += 1
-      }
-      false
-    }
+    def hasTopLevelGroupBy(s: String): Boolean =
+      HiveQlText(s).keywords("group")
+        .exists(i => s.substring(i).matches("""(?is)group\s+by\b.*"""))
     parseItems(select).flatMap { case (items, from) =>
       val subFrom = """(?is)\A\s*\((.*)\)\s*(?:as\s+)?`?\w*`?\s*\z""".r
         .findFirstMatchIn(from)
@@ -556,7 +488,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
             "LINES TERMINATED BY only supports newline '\\n' right now")
       }
     val partColDefs = PartitionedByRe.findFirstMatchIn(tail)
-      .map(m => splitCols(m.group(1))).getOrElse(Nil)
+      .map(m => HiveQlText(m.group(1)).split(',', types = true)).getOrElse(Nil)
     val delim = FieldsTermRe.findFirstMatchIn(tail)
       .map(m => unescapeDelim(m.group(1)))
       .orElse {
@@ -578,7 +510,8 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     val partNames = partColDefs.map(_.split("\\s+").head)
     val clusterCols = ClusteredByRe.findFirstMatchIn(tail)
       .map(m => m.group(1).split(",").map(_.trim).toSeq).getOrElse(Nil)
-    val allCols = (splitCols(colBody) ++ partColDefs).mkString(", ")
+    val colDefs = HiveQlText(colBody).split(',', types = true)
+    val allCols = (colDefs ++ partColDefs).mkString(", ")
     val defaultFmt = hiveconf.get("hive.default.fileformat")
       .map(_.trim.toLowerCase).filter(FormatClasses.contains)
       .getOrElse("textfile")
@@ -622,7 +555,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
           .findFirstIn(tail).isDefined
       val nestCap = if (extended) 23 else 7
       val maxNest =
-        (splitCols(colBody) ++ partColDefs).map(typeDepth).foldLeft(0)(math.max)
+        (colDefs ++ partColDefs).map(typeDepth).foldLeft(0)(math.max)
       if (maxNest > nestCap)
         throw new IllegalArgumentException(
           s"Number of levels of nesting supported for LazySimpleSerde is " +
@@ -1491,7 +1424,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         val linesOk =
           try { descColLines(t, c, formatted, specOpt); true }
           catch { case _: Exception => false }
-        val spec = specOpt.map(s => canonSpec(parsePartitionSpec(s)))
+        val spec = specOpt.map(s => canonSpec(HiveQlText.parsePartitionSpec(s)))
           .getOrElse("")
         linesOk && (!formatted || (descExtra.get(dxKey(t)).forall(dd =>
           !dd.unknown && !dd.colStatsDeny.contains((spec, c.toLowerCase))) &&
@@ -1618,7 +1551,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         "num_nulls", "distinct_count", "avg_col_len", "max_col_len",
         "num_trues", "num_falses", "comment").map(p20).mkString("\t")
       val sep = "\t " * 10
-      val spec = specOpt.map(s => canonSpec(parsePartitionSpec(s)))
+      val spec = specOpt.map(s => canonSpec(HiveQlText.parsePartitionSpec(s)))
         .getOrElse("")
       val st = colStatOf(table, spec, typedCol.toLowerCase)
       st match {
@@ -1816,7 +1749,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
           storageSection(meta.format, d.storage, d.numBuckets,
             d.bucketCols, d.sortCols)
       case Some(rawSpec) =>
-        val specSeq = parsePartitionSpec(rawSpec)
+        val specSeq = HiveQlText.parsePartitionSpec(rawSpec)
         val spec = canonSpec(specSeq)
         require(d.files.contains(spec), s"unknown partition $spec")
         val partParams =
@@ -2101,7 +2034,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     val qt = quoteName(table)
     val df = spark.table(qt)
     val meta = tableMeta.getOrElse(table.toLowerCase, TableMeta("", Nil))
-    val newDefs = splitCols(colBody).map { d =>
+    val newDefs = HiveQlText(colBody).split(',', types = true).map { d =>
       val noComment = d.replaceAll("(?is)\\s+COMMENT\\s+'[^']*'", "").trim
       val parts = noComment.split("\\s+", 2)
       (parts(0).replaceAll("`", ""), parts(1).trim)
@@ -2333,12 +2266,6 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
   private val DropViewRe =
     """(?is)\s*DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*""".r
 
-  private def parsePartitionSpec(spec: String): Seq[(String, String)] =
-    spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
-      val Array(k, v) = kv.split("=", 2).map(_.trim)
-      k -> v.stripPrefix("'").stripSuffix("'").stripPrefix("\"").stripSuffix("\"")
-    }
-
   sealed trait StmtKind
   case object Query extends StmtKind      // run + compare rows
   case object MetaQuery extends StmtKind  // DESCRIBE/SHOW: compare rows,
@@ -2390,46 +2317,6 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
   private val NoopRe =
     """(?i)\bnoop(?:withmap)?(?:streaming)?\s*\(\s*on\b""".r
 
-  private def parenClose(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '\'' || c == '"') quote = c
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    s.length - 1
-  }
-
-  /** First index in `s` where any of `words` starts as a top-level
-    * (depth-0, unquoted) word token, or -1. */
-  private def firstTopLevelWord(s: String, words: Seq[String]): Int = {
-    var depth = 0; var i = 0; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && c.isLetter &&
-          (i == 0 || { val p = s.charAt(i - 1)
-            !p.isLetterOrDigit && p != '_' })) {
-        val hit = words.exists { w =>
-          i + w.length <= s.length &&
-            s.substring(i, i + w.length).equalsIgnoreCase(w) &&
-            (i + w.length == s.length || {
-              val n = s.charAt(i + w.length)
-              !n.isLetterOrDigit && n != '_' })
-        }
-        if (hit) return i
-        i += 1
-      } else i += 1
-    }
-    -1
-  }
-
   private def rewriteNoopPtf(sql0: String): String = {
     var sql = sql0
     var m = NoopRe.findFirstMatchIn(sql)
@@ -2437,11 +2324,11 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     while (m.isDefined && guard < 64) {
       val mm = m.get
       val open = sql.indexOf('(', mm.start)
-      val close = parenClose(sql, open)
+      val close = HiveQlText(sql).matchParen(open)
       val body = sql.substring(mm.end, close)
-      val cut = firstTopLevelWord(body,
-        Seq("partition", "order", "distribute", "sort"))
-      val rel = (if (cut >= 0) body.substring(0, cut) else body).trim
+      val rel = HiveQlText(body)
+        .firstKeyword("partition", "order", "distribute", "sort")
+        .fold(body)(body.substring(0, _)).trim
       sql = sql.substring(0, mm.start) + rel + sql.substring(close + 1)
       m = NoopRe.findFirstMatchIn(sql)
       guard += 1
@@ -2452,22 +2339,16 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
   /** Hive 1.2 literal typing (ref ql/parse/HiveLexer.g Number →
     * TOK_DOUBLE): an unsuffixed numeral with a decimal point is a
     * DOUBLE; Spark parses it as DECIMAL(p,s). Rewrite by appending
-    * Spark's D suffix — quote-aware, token-boundary-checked, and only
+    * Spark's D suffix — in code only, token-boundary-checked, and only
     * here in the qtest runner (the engine's own front door keeps
     * Spark literal typing; this is 1.2-era text fidelity). */
   private[qtest] def hiveDoubleLiterals(sql: String): String = {
+    val t = HiveQlText(sql)
     val out = new StringBuilder
     var i = 0
-    var quote: Char = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (quote != 0) {
-        out += c
-        if (c == '\\' && i + 1 < sql.length) { i += 1; out += sql.charAt(i) }
-        else if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else if (c.isDigit &&
+      if (t.code(i) && c.isDigit &&
           (i == 0 || { val p = sql.charAt(i - 1)
             !p.isLetterOrDigit && p != '_' && p != '.' })) {
         var j = i
@@ -2758,7 +2639,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     if (out.exists() && Option(out.list()).exists(_.nonEmpty))
       throw new IllegalArgumentException(
         s"Target is not an empty directory : $path")
-    val spec = specOpt.map(parsePartitionSpec).getOrElse(Nil)
+    val spec = specOpt.map(HiveQlText.parsePartitionSpec).getOrElse(Nil)
     val df0 = spark.table(quoteName(tbl))
     val df = spec.foldLeft(df0) { case (d, (k, v)) =>
       d.filter(col(s"`$k`").cast("string") === v) }
@@ -2798,7 +2679,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
       throw new IllegalArgumentException(
         s"IMPORT: no export metadata found at $from"))
     val name = tblOpt.getOrElse(snap.name)
-    val spec = specOpt.map(parsePartitionSpec)
+    val spec = specOpt.map(HiveQlText.parsePartitionSpec)
     val canonLoc = locOpt.map(canonEximPath)
     // partition-spec validation against the EXPORTED metadata (ref
     // ImportSemanticAnalyzer: spec must name every partition column and
@@ -3046,7 +2927,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
       s"struct $kind { " +
         fs.map(f => s"${thriftType(f.dataType)} ${f.name}").mkString(", ") +
         "}"
-    val spec = specOpt.map(parsePartitionSpec)
+    val spec = specOpt.map(HiveQlText.parsePartitionSpec)
     val sizes: Seq[Long] = spec match {
       case Some(s) =>
         val key = canonSpec(s.map { case (k, v) => (k, v) })
@@ -3146,27 +3027,6 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     if (!"""(?is).*\bcast\s*\(.*\bas\s+timestamp\s*\).*""".r.matches(stmt))
       return stmt
     import org.apache.spark.sql.types._
-    def lastTopLevelAs(s: String): Int = {
-      var depth = 0; var i = 0; var last = -1
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (c == '\'' || c == '"') { // skip literal
-          val q = c; i += 1
-          while (i < s.length && s.charAt(i) != q) i += 1
-        } else if (depth == 0 && (c == 'a' || c == 'A') &&
-            i + 1 < s.length &&
-            (s.charAt(i + 1) == 's' || s.charAt(i + 1) == 'S') &&
-            (i == 0 || !s.charAt(i - 1).isLetterOrDigit &&
-              s.charAt(i - 1) != '_') &&
-            (i + 2 >= s.length || !s.charAt(i + 2).isLetterOrDigit &&
-              s.charAt(i + 2) != '_'))
-          last = i
-        i += 1
-      }
-      last
-    }
     def integralExpr(e: String): Boolean = {
       if (e.contains("'") || e.contains("\"")) return false
       val ids = """[A-Za-z_]\w*""".r.findAllIn(e)
@@ -3180,14 +3040,15 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     }
     val replaced = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     val out = new StringBuilder(stmt)
+    val t = HiveQlText(stmt)
     """(?i)\bcast\s*\(""".r.findAllMatchIn(stmt).toSeq.reverse.foreach { m =>
       val open = stmt.indexOf('(', m.start)
-      val close = parenClose(stmt, open)
+      val close = t.matchParen(open)
       val overlaps = replaced.exists { case (a, b) =>
         m.start < b && close > a }
       if (!overlaps) {
         val inner = stmt.substring(open + 1, close)
-        val asIdx = lastTopLevelAs(inner)
+        val asIdx = HiveQlText(inner).keywords("as").lastOption.getOrElse(-1)
         if (asIdx >= 0 &&
             inner.substring(asIdx + 2).trim.equalsIgnoreCase("timestamp")) {
           val exprTxt = inner.substring(0, asIdx).trim
@@ -3235,9 +3096,10 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
   private def rewriteHashChars(stmt: String): String = {
     if (!"""(?is).*\bhash\s*\(.*""".r.matches(stmt)) return stmt
     val out = new StringBuilder(stmt)
+    val t = HiveQlText(stmt)
     """(?i)\bhash\s*\(""".r.findAllMatchIn(stmt).toSeq.reverse.foreach { m =>
       val open = stmt.indexOf('(', m.start)
-      val close = parenClose(stmt, open)
+      val close = t.matchParen(open)
       val inner = stmt.substring(open + 1, close).trim
       val args: Option[Seq[String]] =
         if (inner == "*") {
@@ -3249,7 +3111,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
             try Some(spark.table(quoteName(froms.head))
               .schema.fields.toSeq.map(f => s"`${f.name}`"))
             catch { case _: Exception => None }
-        } else Some(splitCols(inner))
+        } else Some(HiveQlText(inner).split(','))
       args.foreach { as =>
         val wrapped = as.map { a =>
           val bare = a.trim.replaceAll("^`|`$", "")
@@ -3300,14 +3162,15 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     val CastFloat =
       """(?i)cast\(\s*('[^']+'|-?\d+(?:\.\d+)?)\s+as\s+(?:float|double)\s*\)""".r
     val sbIn = new StringBuilder(out)
+    val t = HiveQlText(out)
     inOpen.findAllMatchIn(out).toSeq.reverse.foreach { m =>
       val open = out.indexOf('(', m.end - 1)
-      val close = parenClose(out, open)
+      val close = t.matchParen(open)
       val body = out.substring(open + 1, close)
       val isDec = resolveColType(m.group(1).split('.').last, stmt)
         .exists(_.isInstanceOf[DecimalType])
       if (isDec && !body.toLowerCase.contains("select")) {
-        val items = splitCols(body).map(_.trim)
+        val items = HiveQlText(body).split(',')
         val allNumeric = items.nonEmpty && items.forall {
           case QuotedNum(_) | BareNum() | CastFloat(_) => true
           case _ => false
@@ -3357,11 +3220,12 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
   private def rewriteMaskChar(stmt: String): String = {
     if (!"""(?is).*\bmask\w*\s*\(\s*cast\s*\(.*""".r.matches(stmt)) return stmt
     val out = new StringBuilder(stmt)
+    val t = HiveQlText(stmt)
     MaskCharRe.findAllMatchIn(stmt).toSeq.reverse.foreach { m =>
       val callOpen = stmt.indexOf('(', m.start + m.group(1).length)
-      val callClose = parenClose(stmt, callOpen)
+      val callClose = t.matchParen(callOpen)
       val castOpen = stmt.indexOf('(', m.end - 1)
-      val castClose = parenClose(stmt, castOpen)
+      val castClose = t.matchParen(castOpen)
       val inner = stmt.substring(castOpen + 1, castClose)
       val CharTail = """(?is)(.*)\s+as\s+char\s*\(\s*(\d+)\s*\)\s*$""".r
       inner match {
@@ -3508,7 +3372,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     val kind = Option(m.group(1)).map(_.toUpperCase)
     val name = m.group(2)
     val part = Option(m.group(4)).map(spec =>
-      parsePartitionSpec(spec).map(_._2).mkString("[", ", ", "]"))
+      HiveQlText.parsePartitionSpec(spec).map(_._2).mkString("[", ", ", "]"))
       .getOrElse("")
     if (kind.contains("DATABASE")) (name, "", part)
     else {
@@ -3720,21 +3584,16 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
               case other => other.children.flatMap(rels).distinct
             }
           } catch { case _: Exception =>
-            // ADVICE r14: parsePlan failure must not silently skip
-            // read-authorization — fall back to name-based extraction
-            // of FROM/JOIN sources. ADVICE r15: strip string literals
-            // and comments first so FROM/JOIN inside a literal or a
-            // comment can't demand SELECT on a phantom table (the
-            // fallback can still under-demand on quoted/subquery-only
-            // sources; it is a best-effort net below a parser failure,
-            // never the primary path).
-            val stripped = stmt
-              .replaceAll("(?s)/\\*.*?\\*/", " ")
-              .replaceAll("(?m)--.*$", " ")
-              .replaceAll("(?s)'(?:[^'\\\\]|\\\\.)*'", "''")
-              .replaceAll("(?s)\"(?:[^\"\\\\]|\\\\.)*\"", "\"\"")
+            // parsePlan failure must not silently skip read-authorization
+            // — fall back to name-based extraction of FROM/JOIN sources,
+            // over the text with literals and comments blanked so
+            // FROM/JOIN inside a literal or a comment can't demand SELECT
+            // on a phantom table (the fallback can still under-demand on
+            // quoted/subquery-only sources; it is a best-effort net below
+            // a parser failure, never the primary path).
             """(?is)\b(?:FROM|JOIN)\s+`?([A-Za-z_][\w.]*)`?""".r
-              .findAllMatchIn(stripped).map(_.group(1)).toSeq.distinct
+              .findAllMatchIn(HiveQlText(stmt).blanked).map(_.group(1))
+              .toSeq.distinct
           }
         scanInputs.foreach(t => need(t, "select", "QUERY"))
       case "DROP"
@@ -4055,7 +3914,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         val (db, t) = dbTblOf(m.group(1))
         """(?is)PARTITION\s*\(([^)]*)\)""".r.findAllMatchIn(m.group(2))
           .foreach { pm =>
-            auth.inheritPartition(db, t, parsePartitionSpec(pm.group(1))
+            auth.inheritPartition(db, t, HiveQlText.parsePartitionSpec(pm.group(1))
               .map(_._2).mkString("[", ", ", "]"))
           }
       }
@@ -4063,7 +3922,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
       .findFirstMatchIn(body).foreach { m =>
         val (db, t) = dbTblOf(m.group(1))
         if (!m.group(2).split(",").exists(kv => !kv.contains("=")))
-          auth.inheritPartition(db, t, parsePartitionSpec(m.group(2))
+          auth.inheritPartition(db, t, HiveQlText.parsePartitionSpec(m.group(2))
             .map(_._2).mkString("[", ", ", "]"))
       }
 
@@ -4318,7 +4177,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         Option(partSpec) match {
           case Some(sp) =>
             dEx.partStorage = dEx.partStorage +
-              (canonSpec(parsePartitionSpec(sp)) -> triple)
+              (canonSpec(HiveQlText.parsePartitionSpec(sp)) -> triple)
           case None => dEx.storage = Some(triple)
         }
         (Effect, None)
@@ -4337,7 +4196,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         Option(partSpec) match {
           case Some(sp) =>
             val d2 = dx(table)
-            val cs = canonSpec(parsePartitionSpec(sp))
+            val cs = canonSpec(HiveQlText.parsePartitionSpec(sp))
             d2.partFormat = d2.partFormat + (cs -> fmt.toLowerCase)
             alterTriple match {
               case Some(t) => d2.partStorage = d2.partStorage + (cs -> t)
@@ -4486,7 +4345,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         (Effect, None)
       case LoadRe(path, ovw, table, partSpec) =>
         loadData(path, table, ovw != null,
-          Option(partSpec).map(parsePartitionSpec).getOrElse(Nil))
+          Option(partSpec).map(HiveQlText.parsePartitionSpec).getOrElse(Nil))
         (Effect, None)
       case CreateAvroLiteralRe(name)
           if !"""(?is).*\bAS\s+SELECT\b.*""".r.matches(body) =>
@@ -4508,7 +4367,8 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
             }
           }.toMap
         val partDefs = PartitionedByRe.findFirstMatchIn(body)
-          .map(m => splitCols(m.group(1))).getOrElse(Nil)
+          .map(m => HiveQlText(m.group(1)).split(',', types = true))
+          .getOrElse(Nil)
         val partNames2 = partDefs.map(_.trim.split("\\s+").head)
         if (spark.catalog.tableExists(name) &&
             spark.catalog.getTable(name).isTemporary)
@@ -4693,7 +4553,9 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         }
         if ("""(?is).*'transactional'\s*=\s*'true'.*""".r.matches(body))
           acidDeclTables += name.toLowerCase
-        val (colBody, tail) = splitAtMatchingParen(rest)
+        // `rest` follows the column list's '('
+        val close = HiveQlText("(" + rest).matchParen(0)
+        val (colBody, tail) = (rest.substring(0, close - 1), rest.substring(close))
         createTable(name, colBody, tail,
           ifNotExists = """(?is)\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+IF\s+NOT\s+EXISTS\b.*""".r.matches(body))
         """(?is)\bLOCATION\s+'([^']+)'""".r.findFirstMatchIn(tail)
@@ -4839,10 +4701,10 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     insMatches.zipWithIndex.foreach { case (m, idx) =>
       val specRaw = Option(m.group(3))
       val dynamic = specRaw.exists(s =>
-        s.split(",").exists(kv => !kv.contains("=")))
+        HiveQlText(s).split(',').exists(kv => !kv.contains("=")))
       descOnWrite(m.group(2),
         specRaw.filterNot(_ => dynamic)
-          .map(parsePartitionSpec).getOrElse(Nil),
+          .map(HiveQlText.parsePartitionSpec).getOrElse(Nil),
         m.group(1).equalsIgnoreCase("OVERWRITE"), dynamic, branches)
       if (inferActive && !dynamic) {
         val end = insMatches.lift(idx + 1).map(_.start).getOrElse(body.length)
@@ -4863,7 +4725,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         if (dcols.nonEmpty) {
           val d = dx(m.group(2))
           d.inferred = d.inferred + (canonSpec(specRaw
-            .map(parsePartitionSpec).getOrElse(Nil)) ->
+            .map(HiveQlText.parsePartitionSpec).getOrElse(Nil)) ->
             InferBucketSort.infer(sel, dcols))
         }
       }
@@ -4880,7 +4742,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         // the placement so a later dfs -rmr empties it (exim_17)
         """(?is)PARTITION\s*\(([^)]*)\)\s*LOCATION\s+'([^']+)'""".r
           .findAllMatchIn(m.group(2)).foreach { p =>
-            val specSeq = parsePartitionSpec(p.group(1))
+            val specSeq = HiveQlText.parsePartitionSpec(p.group(1))
             val s = canonSpec(specSeq)
             if (!d.files.contains(s))
               d.partProps = d.partProps + (s -> inheritedPartProps(d))
@@ -4897,7 +4759,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
       else
         """(?is)PARTITION\s*\(([^)]*)\)""".r.findAllMatchIn(m.group(2))
           .foreach { p =>
-            val s = canonSpec(parsePartitionSpec(p.group(1)))
+            val s = canonSpec(HiveQlText.parsePartitionSpec(p.group(1)))
             if (!d.files.contains(s))
               d.partProps = d.partProps + (s -> inheritedPartProps(d))
             d.files = d.files + (s -> 0)
@@ -4916,7 +4778,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
           // equality specs only; comparison-op drops → unknown
           if (p.group(1).exists("<>!".contains(_))) d.unknown = true
           else {
-            val s = canonSpec(parsePartitionSpec(p.group(1)))
+            val s = canonSpec(HiveQlText.parsePartitionSpec(p.group(1)))
             d.files = d.files - s
             d.accurate = d.accurate - s
             d.loadedBytes = d.loadedBytes - s
@@ -4970,7 +4832,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
       if (body.toUpperCase.contains("COLUMNS")) d.unknown = true
       else {
         val specs = Option(m.group(2))
-          .map(s => Seq(canonSpec(parsePartitionSpec(s))))
+          .map(s => Seq(canonSpec(HiveQlText.parsePartitionSpec(s))))
           .getOrElse(d.files.keys.toSeq)
         specs.foreach { s =>
           d.files = d.files + (s -> 0)
@@ -4991,9 +4853,9 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
         val d = dx(m.group(1))
         val specRaw = Option(m.group(2))
         val dynamic = specRaw.exists(s =>
-          s.split(",").exists(kv => !kv.contains("=")))
+          HiveQlText(s).split(',').exists(kv => !kv.contains("=")))
         if (!dynamic) {
-          val s = specRaw.map(x => canonSpec(parsePartitionSpec(x)))
+          val s = specRaw.map(x => canonSpec(HiveQlText.parsePartitionSpec(x)))
             .getOrElse("")
           if (d.files.contains(s)) {
             d.accurate = d.accurate + (s -> true)
@@ -5023,8 +4885,8 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
       """PARTITION\s*\(([^)]*)\)\s+RENAME\s+TO\s+PARTITION\s*\(([^)]*)\)""").r
     RenamePartRe.findFirstMatchIn(body).foreach { m =>
       val d = dx(m.group(1))
-      val o = canonSpec(parsePartitionSpec(m.group(2)))
-      val n2 = canonSpec(parsePartitionSpec(m.group(3)))
+      val o = canonSpec(HiveQlText.parsePartitionSpec(m.group(2)))
+      val n2 = canonSpec(HiveQlText.parsePartitionSpec(m.group(3)))
       def mv[A](mp: Map[String, A]): Map[String, A] =
         mp.get(o).map(v => mp - o + (n2 -> v)).getOrElse(mp)
       d.files = mv(d.files)
@@ -5085,18 +4947,18 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
   private val SumLagRe = """(?i)\bsum\s*\(\s*lag\s*\(""".r
 
   private[qtest] def rewriteNestedWindowAgg(stmt0: String): Option[String] = {
-    val G = graft.GraftSession
     val stmt = stmt0.replaceAll(";+\\s*$", "")
-    val named = G.windowSpansNamed(stmt).collect { case (Some(n), o, c) =>
+    val t = HiveQlText(stmt)
+    val named = t.windowSpans.collect { case (Some(n), o, c) =>
       n.toLowerCase -> stmt.substring(o + 1, c) }.toMap
     final case class Edit(start: Int, end: Int, repl: String)
     val edits = scala.collection.mutable.ArrayBuffer.empty[Edit]
     SumLagRe.findAllMatchIn(stmt).foreach { m =>
       val sumOpen = stmt.indexOf('(', m.start)
       val lagOpen = m.end - 1
-      val lagClose = parenClose(stmt, lagOpen)
-      val sumClose = parenClose(stmt, sumOpen)
-      val args = splitCols(stmt.substring(lagOpen + 1, lagClose))
+      val lagClose = t.matchParen(lagOpen)
+      val sumClose = t.matchParen(sumOpen)
+      val args = HiveQlText(stmt.substring(lagOpen + 1, lagClose)).split(',')
       val tight = stmt.substring(lagClose + 1, sumClose).trim.isEmpty
       if (tight && (args.length == 2 || args.length == 3) &&
           args(1).trim.matches("""\d+""")) {
@@ -5110,7 +4972,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
           while (kk < stmt.length && stmt.charAt(kk).isWhitespace) kk += 1
           val parsed: Option[(String, Int)] =
             if (kk < stmt.length && stmt.charAt(kk) == '(') {
-              val c2 = parenClose(stmt, kk)
+              val c2 = t.matchParen(kk)
               Some((stmt.substring(kk + 1, c2), c2 + 1))
             } else {
               var e = kk
@@ -5119,9 +4981,9 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
               named.get(stmt.substring(kk, e).toLowerCase).map((_, e))
             }
           parsed.foreach { case (spec, endAt) =>
-            if (firstTopLevelWord(spec, Seq("rows", "range")) < 0) {
+            if (HiveQlText(spec).firstKeyword("rows", "range").isEmpty) {
               val po = spec.trim
-              // null-PRESERVING collect (ADVICE r09): bare
+              // null-PRESERVING collect: bare
               // collect_list(x) drops NULL elements while the count(*)
               // prefix position counts every row, so slice indices
               // misalign on nullable columns — wrap each element in a
@@ -5158,10 +5020,10 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
 
   private[qtest] def rewriteStringRangeFrames(stmt: String): String = {
     val sb = new StringBuilder(stmt)
-    graft.GraftSession.windowSpans(stmt).sortBy(-_._1).foreach {
-      case (open, close) =>
+    HiveQlText(stmt).windowSpans.sortBy(-_._2).foreach {
+      case (_, open, close) =>
         val body = sb.substring(open + 1, close)
-        val frameAt = graft.GraftSession.firstTopLevelToken(body, "range")
+        val frameAt = HiveQlText(body).firstKeyword("range").getOrElse(-1)
         if (frameAt >= 0 && orderIsString(body, frameAt, stmt)) {
           val frame = body.substring(frameAt)
           val rewritten = NumericBoundRe.replaceAllIn(frame, "CURRENT ROW")
@@ -5183,9 +5045,8 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     * recoverable retry into a golden mismatch. */
   private def orderIsString(body: String, frameAt: Int,
       stmt: String): Boolean = {
-    val G = graft.GraftSession
-    val ord = Seq("order", "sort").map(G.firstTopLevelToken(body, _))
-      .filter(_ >= 0).minOption.getOrElse(return false)
+    val ord = HiveQlText(body).firstKeyword("order", "sort")
+      .getOrElse(return false)
     val exprs = body.substring(ord, frameAt)
       .replaceAll("""(?is)^\s*(order|sort)\s+by\s+""", "")
     val first = exprs.split(",").head.trim
@@ -5271,17 +5132,17 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
   /** Rewrite the statement's windowed sum/avg/variance-family calls to
     * Hive's exact accumulation; None when nothing is rewritable. */
   private[qtest] def rewriteHiveNumerics(stmt0: String): Option[String] = {
-    val G = graft.GraftSession
     val stmt = stmt0.replaceAll(";+\\s*$", "")
     if (RetryFnRe.findFirstIn(stmt).isEmpty) return None
-    val named = G.windowSpansNamed(stmt).collect { case (Some(n), o, c) =>
+    val t = HiveQlText(stmt)
+    val named = t.windowSpans.collect { case (Some(n), o, c) =>
       n.toLowerCase -> stmt.substring(o + 1, c) }.toMap
     final case class Edit(start: Int, end: Int, repl: String)
     val edits = scala.collection.mutable.ArrayBuffer.empty[Edit]
     RetryFnRe.findAllMatchIn(stmt).foreach { m =>
       val fn = m.group(1).toLowerCase
       val open = stmt.indexOf('(', m.start)
-      val close = parenClose(stmt, open)
+      val close = t.matchParen(open)
       if (close > open) {
         val x = stmt.substring(open + 1, close).trim
         var j = close + 1
@@ -5293,7 +5154,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
           // (specBody, overText, endAt)
           val parsed: Option[(String, String, Int)] =
             if (k < stmt.length && stmt.charAt(k) == '(') {
-              val c2 = parenClose(stmt, k)
+              val c2 = t.matchParen(k)
               val body = stmt.substring(k + 1, c2)
               Some((body, s"over ($body)", c2 + 1))
             } else {
@@ -5318,7 +5179,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
               // the OLD averages, variances/covariance the NEW ones;
               // GenericUDAFCovariance.java: yavg updates BEFORE covar,
               // xavg AFTER)
-              val args = splitCols(x)
+              val args = HiveQlText(x).split(',')
               if (args.length == 2) {
                 val ax = args(0); val ay = args(1)
                 val pair = s"case when ($ax) is not null and ($ay) is " +
@@ -5382,7 +5243,8 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
                 s"a -> if(a.c = 0, cast(null as double), " +
                 s"if(a.c = 1, cast(0 as double), $fin)))")
             } else if (fn == "sum" || fn == "avg") {
-              val frameAt = firstTopLevelWord(spec, Seq("rows", "range"))
+              val frameAt = HiveQlText(spec).firstKeyword("rows", "range")
+                .getOrElse(-1)
               // Input typing decides the fold: double/float accumulate
               // like Hive's streaming doubles; integral inputs are exact
               // but still need the rewrite when Hive's frame itself
@@ -5451,9 +5313,8 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
                 // PrimitiveObjectInspectorUtils.getLong), so the current
                 // row's peer group spans every same-second row. Reorder
                 // the window on the seconds value to reproduce it.
-                val ordAt = Seq("order", "sort")
-                  .map(wd => firstTopLevelWord(spec, Seq(wd))).filter(_ >= 0)
-                  .minOption.getOrElse(-1)
+                val ordAt = HiveQlText(spec).firstKeyword("order", "sort")
+                  .getOrElse(-1)
                 if (ordAt >= 0) {
                   val ordBody = spec.substring(ordAt)
                     .replaceAll("""(?is)^(order|sort)\s+by\s+""", "")
@@ -5496,24 +5357,23 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
     * `SELECT c1…, f() over w FROM (SELECT DISTINCT c1… FROM R) t …`
     * when every non-window item is a bare column. */
   private[qtest] def rewriteDistinctWindowing(stmt0: String): Option[String] = {
-    val G = graft.GraftSession
     val stmt = stmt0.replaceAll(";+\\s*$", "")
-    val selAt = G.firstTopLevelToken(stmt, "select")
-    val fromAt = G.firstTopLevelToken(stmt, "from")
-    if (selAt < 0 || fromAt < selAt) return None
+    val t = HiveQlText(stmt)
+    val selAt = t.firstKeyword("select").getOrElse(return None)
+    val fromAt = t.firstKeyword("from").getOrElse(return None)
+    if (fromAt < selAt) return None
     val items0 = stmt.substring(selAt + 6, fromAt)
     val dm = """(?is)^\s*distinct\b""".r.findFirstMatchIn(items0)
       .getOrElse(return None)
     val items = items0.substring(dm.end)
     if (!"""(?is).*\bover\b.*""".r.matches(items)) return None
-    val parts = splitCols(items)
+    val parts = HiveQlText(items).split(',')
     val plain = parts.filterNot(p => """(?is).*\bover\b.*""".r.matches(p))
     if (plain.isEmpty || !plain.forall(_.matches("""[\w.]+"""))) return None
     val tail = stmt.substring(fromAt + 4)
-    val cutAt = Seq("where", "window", "order", "limit", "group",
-        "cluster", "distribute", "sort", "having")
-      .map(w => firstTopLevelWord(tail, Seq(w))).filter(_ >= 0)
-      .minOption.getOrElse(tail.length)
+    val cutAt = HiveQlText(tail).firstKeyword("where", "window", "order",
+        "limit", "group", "cluster", "distribute", "sort", "having")
+      .getOrElse(tail.length)
     val fromBody = tail.substring(0, cutAt)
     val tailRest = tail.substring(cutAt)
     Some(s"select $items from (select distinct ${plain.mkString(", ")} " +
@@ -5731,7 +5591,7 @@ final class QtestRunner(base: SparkSession, refRoot: String = "/root/reference")
                 // (HIVE-9228 windowspec query: limit over an unordered
                 // outer select of a windowed subquery)
                 val hasOrder =
-                  graft.GraftSession.firstTopLevelToken(bodyNorm, "order") >= 0
+                  HiveQlText(bodyNorm).firstKeyword("order").isDefined
                 val arbitrarySubset = limits.nonEmpty && !hasOrder &&
                   limits.exists(n => expRows.length >= n)
                 if (arbitrarySubset) {

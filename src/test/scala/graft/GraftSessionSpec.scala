@@ -157,6 +157,50 @@ class GraftSessionSpec extends SparkSpec {
     Warehouse.dropTable(spark, t)
   }
 
+  test("LOAD DATA PARTITION values are read quote-aware") {
+    import spark.implicits._
+    val t = "gs_fd_pspec"
+    Warehouse.dropTable(spark, t)
+    Warehouse.createTable(Seq((1L, "a", "x")).toDF("id", "v", "p"),
+      t, partitionBy = Seq("p"))
+    def load(spec: String): Unit = {
+      val stage = java.nio.file.Files.createTempDirectory("fdps").toString + "/in"
+      Seq((2L, "b")).toDF("id", "v").coalesce(1).write.parquet(stage)
+      GraftSession.sql(spark,
+        s"LOAD DATA INPATH '$stage' INTO TABLE $t PARTITION ($spec)")
+    }
+    // a comma inside the quoted value belongs to the value
+    load("p='a,b'")
+    // double quotes delimit the value like single quotes do
+    load("p=\"1\"")
+    val got = spark.table(t).select("p").as[String].collect().toSet
+    assert(got == Set("x", "a,b", "1"), got)
+    Warehouse.dropTable(spark, t)
+  }
+
+  test("/* */ comments are not code in UPDATE on plain and ACID tables") {
+    import spark.implicits._
+    val stmt = "UPDATE %s SET a = 1 /* , b = 2 */ WHERE k = 1 /* where k */"
+    val rows = Seq((1L, 0, 0), (2L, 0, 0)).toDF("k", "a", "b")
+    def got(t: String): Set[(Long, Int, Int)] =
+      spark.table(t).as[(Long, Int, Int)].collect().toSet
+    val expected = Set((1L, 1, 0), (2L, 0, 0))
+    val plain = "gs_fd_comment"
+    Warehouse.dropTable(spark, plain)
+    Warehouse.createTable(rows, plain)
+    GraftSession.sql(spark, stmt.format(plain))
+    assert(got(plain) == expected)
+    Warehouse.dropTable(spark, plain)
+    val path = java.nio.file.Files.createTempDirectory("gs-acid-comment").toString
+    Acid.create(path)
+    Acid.insertTxn(spark, path, rows)
+    Acid.register(spark, "gs_fd_acid_comment", path)
+    try {
+      GraftSession.sql(spark, stmt.format("gs_fd_acid_comment"))
+      assert(got("gs_fd_acid_comment") == expected)
+    } finally Acid.deregister(spark, "gs_fd_acid_comment")
+  }
+
   test("LOAD DATA without a PARTITION spec into a partitioned table is rejected") {
     import spark.implicits._
     val t = "gs_fd_part"
@@ -302,6 +346,8 @@ class GraftSessionSpec extends SparkSpec {
     val bt = GraftSession.hiveWindowCompat(
       "SELECT `weird'col`, max(x) over(cluster by k) FROM t")
     assert(bt.contains("`weird'col`"), bt)
+    val st = GraftSession.hiveStructCompat("SELECT `it's`, struct(a) FROM t")
+    assert(st == "SELECT `it's`, hive_struct(a) FROM t", st)
     // cluster by → partition by, then Hive's default-order filling
     // (WindowingSpec rule 5) adds the partition keys as the order
     assert(bt.contains("over(partition by k order by k)"), bt)

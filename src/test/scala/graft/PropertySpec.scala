@@ -345,6 +345,63 @@ class PropertySpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(run(df.coalesce(1)) == run(df.repartition(16)))
   }
+
+  /** GraftSession.codeMask as it stood before HiveQlText replaced it:
+    * the reference for the lexer's mask on text without block comments. */
+  private def referenceCodeMask(s: String): Array[Boolean] = {
+    val m = new Array[Boolean](s.length)
+    var i = 0
+    var quote: Char = 0
+    var comment = false
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (comment) { if (c == '\n') { comment = false; m(i) = true } }
+      else if (quote != 0) {
+        if (c == '\\' && quote != '`' && i + 1 < s.length) i += 1
+        else if (c == quote) {
+          if (quote != '`' && i + 1 < s.length && s.charAt(i + 1) == quote)
+            i += 1 // '' / "" = escaped quote, stay in string
+          else quote = 0
+        }
+      } else if (c == '\'' || c == '"' || c == '`') quote = c
+      else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-')
+        comment = true
+      else m(i) = true
+      i += 1
+    }
+    m
+  }
+
+  test("HiveQlText: reference mask, paren matching, statement round-trip") {
+    val alphabet = "'\"`\\-*/()[],;\na "
+    (0 until 3000).foreach { trial =>
+      val s = Seq.fill(rnd.nextInt(40))(alphabet(rnd.nextInt(alphabet.length)))
+        .mkString
+      val t = HiveQlText(s)
+      val shown = s.replace("\n", "\\n")
+      if (!s.contains("/*"))
+        assert(s.indices.map(t.code) == referenceCodeMask(s).toSeq,
+          s"trial $trial: mask of $shown")
+      // running paren/bracket count over code: a '(' closes at the first
+      // code ')' after which the count is back to where it was before it
+      var before = 0
+      s.indices.foreach { i =>
+        val c = s.charAt(i)
+        if (t.code(i) && c == '(') {
+          var count = before
+          val expect = (i until s.length).find { k =>
+            if (t.code(k) && "([".contains(s.charAt(k))) count += 1
+            else if (t.code(k) && ")]".contains(s.charAt(k))) count -= 1
+            t.code(k) && s.charAt(k) == ')' && count == before
+          }.getOrElse(s.length - 1)
+          assert(t.matchParen(i) == expect, s"trial $trial: ( at $i of $shown")
+        }
+        if (t.code(i) && "([".contains(c)) before += 1
+        else if (t.code(i) && ")]".contains(c)) before -= 1
+      }
+      assert(t.statements.mkString(";") == s, s"trial $trial: $shown")
+    }
+  }
 }
 
 /** Randomized equivalence of the custom join operators against
