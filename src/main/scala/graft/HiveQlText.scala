@@ -8,7 +8,9 @@ package graft
   * and its paren/bracket depth. Not code: a `'…'` or `"…"` literal (with
   * backslash and doubled-quote escapes), a backticked identifier, a `--`
   * line comment, and a `/* … */` comment (nested, as Spark's lexer reads
-  * it). A `/*+ … */` hint is code. Quote and comment delimiters are not
+  * it). A `/*+ … */` hint is code. Without `blockComments` (Hive 1.2's
+  * CLI and lexer, which qtest scripts are written for) slash-star is code
+  * too, as in a `dfs -ls` glob. Quote and comment delimiters are not
   * code; the newline that ends a `--` comment is. So a keyword, paren,
   * comma or semicolon inside a literal, an identifier or a comment never
   * steers a rewrite (statements from qtest scripts keep their comments).
@@ -17,7 +19,7 @@ package graft
   * same depth; every other character at the depth around it. A character
   * is top level when it is code at depth 0.
   */
-final class HiveQlText(val text: String) {
+final class HiveQlText(val text: String, blockComments: Boolean = true) {
   import HiveQlText._
 
   private val n = text.length
@@ -36,7 +38,7 @@ final class HiveQlText(val text: String) {
         else if (c == '-' && next == '-') {
           val nl = text.indexOf('\n', i)
           (if (nl < 0) n else nl, Comment)
-        } else if (c == '/' && next == '*' &&
+        } else if (blockComments && c == '/' && next == '*' &&
             !(i + 2 < n && text.charAt(i + 2) == '+')) (blockEnd(i), Comment)
         else (-1, Code)
       if (end >= 0) {
@@ -234,7 +236,8 @@ object HiveQlText {
   private final val Ident: Byte = 2
   private final val Comment: Byte = 3
 
-  def apply(text: String): HiveQlText = new HiveQlText(text)
+  def apply(text: String, blockComments: Boolean = true): HiveQlText =
+    new HiveQlText(text, blockComments)
 
   private def identChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
 

@@ -26,11 +26,16 @@ object Qtest {
     * comments attached to a statement are preserved (the reference
     * echoes them into the golden file). */
   def splitStatements(script: String): Seq[String] =
-    graft.HiveQlText(script).statements.map(_.trim)
+    hive12(script).statements.map(_.trim)
       .filter(s => stripComments(s).trim.nonEmpty)
 
-  /** Drop comment text, literals untouched. */
-  def stripComments(s: String): String = graft.HiveQlText(s).stripComments
+  /** Drop `--` comment text, literals untouched. */
+  def stripComments(s: String): String = hive12(s).stripComments
+
+  /** The scripts follow Hive 1.2's CLI and lexer, which have `--`
+    * comments only: slash-star is code, so a `dfs -ls` glob ending in it
+    * neither swallows the statements after it nor loses its star. */
+  private def hive12(s: String) = graft.HiveQlText(s, blockComments = false)
 
   /** Whitespace-collapsed comment-free form, for statement↔golden-echo
     * alignment checks. */

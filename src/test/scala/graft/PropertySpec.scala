@@ -379,9 +379,15 @@ class PropertySpec extends SparkSpec {
         .mkString
       val t = HiveQlText(s)
       val shown = s.replace("\n", "\\n")
+      val ref = referenceCodeMask(s).toSeq
       if (!s.contains("/*"))
-        assert(s.indices.map(t.code) == referenceCodeMask(s).toSeq,
-          s"trial $trial: mask of $shown")
+        assert(s.indices.map(t.code) == ref, s"trial $trial: mask of $shown")
+      // without block comments (the qtest script rules) on every input
+      val hive12 = HiveQlText(s, blockComments = false)
+      assert(s.indices.map(hive12.code) == ref,
+        s"trial $trial: script mask of $shown")
+      assert(hive12.statements.mkString(";") == s,
+        s"trial $trial: script split of $shown")
       // running paren/bracket count over code: a '(' closes at the first
       // code ')' after which the count is back to where it was before it
       var before = 0

@@ -28,6 +28,18 @@ class QtestScannerSpec extends graft.SparkSpec {
     assert(Qtest.normalize("SELECT  a -- c\n ,b\tFROM t") == "SELECT a ,b FROM t")
   }
 
+  test("script rules: /* is code, so a dfs glob ends at its semicolon") {
+    val script = "dfs -ls ${system:test.warehouse.dir}/t/*;\n" +
+      "dfs -rmr ${system:test.warehouse.dir}/t/*;\n" +
+      "SELECT count(*) FROM t; SELECT 1 /* x */ FROM t"
+    assert(Qtest.splitStatements(script) == Seq(
+      "dfs -ls ${system:test.warehouse.dir}/t/*",
+      "dfs -rmr ${system:test.warehouse.dir}/t/*",
+      "SELECT count(*) FROM t",
+      "SELECT 1 /* x */ FROM t"))
+    assert(Qtest.stripComments("dfs -rmr /w/t/* -- x") == "dfs -rmr /w/t/* ")
+  }
+
   test("CREATE TABLE column defs split at top level, nested types intact") {
     val runner = new QtestRunner(spark)
     val db = "qtest_scanner_spec_ddl"
