@@ -114,12 +114,10 @@ object AnalyticsQueries {
       FROM inter JOIN sizes s ON s.id = id_a
       WHERE n_shared::DOUBLE / s.n >= 0.8""") { (s, d) =>
       val docs = Tables.load(s, d, "documents")
-      val toks = TextOps.tokens(col("text"))
-      // tokenize bound once (the operators' lambda idiom): an aliased
-      // size filter would be inlined and split every quoted doc twice
       val quotes = docs.filter(pmod(col("doc_id"), lit(40)) === 0)
         .select((col("doc_id") + 100000L).as("id"),
-          explode(filter(array(toks), t => size(t) >= 30)).as("t"))
+          TextOps.explodeOnceIf(TextOps.tokens(col("text")))(
+            t => size(t) >= 30).as("t"))
         .select(col("id"), concat_ws(" ", slice(col("t"), 1, 30)).as("text"))
       val corpus = docs.select(col("doc_id").as("id"), col("text"))
         .unionByName(quotes)

@@ -170,7 +170,8 @@ object WavPcm16Stats {
   * ISO/IEC 14496-12 §4.2), requires an `ftyp` leading box (the MP4
   * magic), then inside `moov` reads `mvhd` (version 0: timescale u32 @
   * +12, duration u32 @ +16; version 1: timescale u32 @ +20, duration
-  * u64 @ +24) and counts `trak` children. Boxes it does not know
+  * u64 @ +24; all ones = unknown, read as 0) and counts `trak`
+  * children. Boxes it does not know
   * (`free`, `mdat`, `udta`, …) are skipped by size — nothing sits at a
   * fixed offset in real encoder output. Null for non-MP4 payloads and
   * for containers with no parsable moov/mvhd. One bounded pass over the
@@ -249,12 +250,15 @@ object Mp4Meta {
           if (cEnd < 0 || cEnd > limit || cPayload < 0) return null
           if (id4(cp + 4, "mvhd")) {
             val version = if (cPayload < limit) u(cPayload) else -1
+            // all ones marks an unknown duration (§8.2.2.3): read as 0;
+            // a u64 past Long.MaxValue is no duration either
             if (version == 0 && cPayload + 20 <= limit) {
               timescale = be32(cPayload + 12)
               duration = be32(cPayload + 16)
+              if (duration == 0xffffffffL) duration = 0L
             } else if (version == 1 && cPayload + 32 <= limit) {
               timescale = be32(cPayload + 20)
-              duration = be64(cPayload + 24)
+              duration = math.max(be64(cPayload + 24), 0L)
             }
           } else if (id4(cp + 4, "trak")) {
             tracks += 1

@@ -102,15 +102,10 @@ object Dedup {
       bands: Int = 16): MinHashIndex = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-    // the shingle build is bound once via the explode(filter(array(
-    // …))) idiom — a plain alias + size filter is re-inlined by the
-    // optimizer into both the Filter and the Project, running the full
-    // tokenize+shingle twice per document (the sharedSpans note). An
-    // empty shingle set explodes to no rows ≡ the dropped-row filter.
     val shingled = df
       .select(col(idCol).as("id"),
-        explode(filter(array(TextOps.shingleSet(col(textCol), shingleSize)),
-          s => size(s) > 0)).as("shingles"))
+        TextOps.explodeOnceIf(TextOps.shingleSet(col(textCol), shingleSize))(
+          s => size(s) > 0).as("shingles"))
     val banded = shingled.select(col("id"),
         posexplode(TextOps.bandHashes(
           TextOps.minhashSignature(col("shingles"), numHashes), bands)))
@@ -172,10 +167,8 @@ object Dedup {
     // same guard as minhashNearDups
     val hashed = df.select(
       col(idCol).as("id"),
-      // explode(filter(array(…))) binding: tokenize once, not once in
-      // the size filter and again in the simhash projection (r16)
-      explode(filter(array(TextOps.tokens(col(textCol))),
-        t => size(t) > 0)).as("toks"))
+      TextOps.explodeOnceIf(TextOps.tokens(col(textCol)))(t => size(t) > 0)
+        .as("toks"))
       .select(col("id"), TextOps.simhash64(col("toks")).as("simhash"))
 
     val banded = hashed.select(col("id"),
@@ -204,9 +197,8 @@ object Dedup {
     val base = df.select(
       col(idCol).as("id"),
       struct(blockCols.map(col): _*).as("blk"),
-      // explode(filter(array(…))) binding: shingle once per doc (r16)
-      explode(filter(array(TextOps.shingleSet(col(textCol), shingleSize)),
-        s => size(s) > 0)).as("shingles"))
+      TextOps.explodeOnceIf(TextOps.shingleSet(col(textCol), shingleSize))(
+        s => size(s) > 0).as("shingles"))
     val a = base.select(col("blk"), col("id").as("id_a"), col("shingles").as("sh_a"))
     val b = base.select(col("blk"), col("id").as("id_b"), col("shingles").as("sh_b"))
     a.join(b, Seq("blk"))
@@ -246,7 +238,7 @@ object Dedup {
   /** Distinct candidate (id_a < id_b) pairs from band-bucket collisions,
     * with oversized buckets dropped (skew guard).
     *
-    * Shape note (measured at sf1, interleaved A/B in CandDrive): this
+    * Shape note (measured at sf1, interleaved A/B): this
     * 3-shuffle size+join-back+self-join LOOKS replaceable by a single
     * collect_list-per-bucket aggregate + per-member pair explode, and a
     * stage-count profile even favors that — but end-to-end the join shape
@@ -420,22 +412,12 @@ object Dedup {
     // default). The one unavoidable h-shuffle runs BEFORE the persist so
     // it is paid once into the cache instead of once per downstream plan
     // (released once the small pair set materializes).
-    // The tokenize is bound as a LAMBDA variable (`transform(array(
-    // toks), t -> …)`) instead of an aliased column — the optimizer
-    // inlines a plain alias into both the size-guard Filter and the
-    // Generate, re-running the full-text regex split twice per document
-    // (visible in the executed plan's Filter condition). A lambda
-    // binding is opaque to that inlining, so the split runs once; the
-    // size guard folds into the lambda (an empty array explodes to no
-    // rows — identical to the dropped-row filter).
     val gramText = df
       .select(col(idCol).as("id"),
-        explode(flatten(transform(array(toks), t =>
-          when(size(t) >= spanTokens,
-            transform(sequence(lit(1), size(t) - (spanTokens - 1)),
-              i => struct(i.as("pos"),
-                concat_ws(" ", slice(t, i, lit(spanTokens))).as("gram"))))
-            .otherwise(array().cast("array<struct<pos:int,gram:string>>")))))
+        TextOps.explodeOnce(toks)(t =>
+          transform(TextOps.upTo(lit(1), size(t) - (spanTokens - 1)),
+            i => struct(i.as("pos"),
+              concat_ws(" ", slice(t, i, lit(spanTokens))).as("gram"))))
           .as("pg"))
       .select(col("id"), col("pg.pos").as("pos"), col("pg.gram").as("gram"),
         xxhash64(col("pg.gram")).as("h"))
@@ -490,18 +472,10 @@ object Dedup {
     // grouping keys so the h-partitioning satisfies the aggregate —
     // dedup costs no extra shuffle (distinct-then-hash would pay a full
     // (id, g)-string exchange).
-    // The tokenize is bound as a lambda variable so it evaluates once per
-    // document (the sharedSpans note — a plain alias is inlined into
-    // Filter + Generate and the split ran twice); size guard folded into
-    // the lambda, empty array ≡ dropped row.
     val grams = df
       .select(col(idCol).as("id"),
-        explode(flatten(transform(array(toks), t =>
-          when(size(t) >= spanTokens,
-            transform(sequence(lit(1), size(t) - (spanTokens - 1)),
-              i => concat_ws(" ", slice(t, i, lit(spanTokens)))))
-            .otherwise(array().cast("array<string>")))))
-          .as("g"))
+        TextOps.explodeOnce(toks)(
+          TextOps.wordNgrams(_, spanTokens)).as("g"))
       .select(col("id"), col("g"), xxhash64(col("g")).as("h"))
       .repartition(col("h"))
       .dropDuplicates()

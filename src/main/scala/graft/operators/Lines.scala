@@ -28,10 +28,8 @@ object Lines {
     require(n >= 1, "pseudo-line width must be >= 1 token")
     val toks = TextOps.wsTokens(text)
     val groups = ceil(size(toks) / lit(n.toDouble)).cast("int")
-    when(groups >= 1,
-      transform(sequence(lit(0), groups - 1),
-        g => concat_ws(" ", slice(toks, g * n + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    transform(TextOps.upTo(lit(0), groups - 1),
+      g => concat_ws(" ", slice(toks, g * n + 1, lit(n))))
   }
 
   /** Strip lines whose document frequency (distinct docs containing the

@@ -119,7 +119,8 @@ object Multimodal {
     * and track count from the actual ISO-BMFF box chain
     * (graft.functions.Mp4Meta — ftyp magic, moov/mvhd/trak walk,
     * unknown boxes skipped by size); null for non-MP4 payloads. Derive
-    * duration_ms as duration * 1000 / timescale in query space. */
+    * duration_ms as duration * 1000 / timescale in query space (see
+    * `withDecodedMeta` for the form that cannot overflow). */
   def mp4Meta(bin: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
     toCol(graft.functions.Mp4Meta(toExpr(bin)))
@@ -175,9 +176,15 @@ object Multimodal {
       wavDurationMs(bin).as("durationMs"),
       wavSampleRate(bin).as("sampleRateHz"), wavChannels(bin).as("channels"))
     val mp4 = mp4Meta(bin)
-    val mp4Duration = when(mp4.getField("timescale") > 0,
-      mp4.getField("duration") * 1000L / mp4.getField("timescale"))
-      .otherwise(lit(0L)).cast("long")
+    // whole seconds and the remainder apart, so duration * 1000 cannot
+    // overflow; no timescale, or milliseconds past Long.MaxValue, read
+    // as unknown (0)
+    val dur = mp4.getField("duration")
+    val ts = nullif(mp4.getField("timescale"), lit(0L))
+    val secs = call_function("div", dur, ts)
+    val mp4Duration = when(secs < Long.MaxValue / 1000,
+      secs * 1000L + call_function("div", (dur % ts) * 1000L, ts))
+      .otherwise(lit(0L))
     val mp4MetaStruct = struct(
       lit("video").as("kind"), lit("video/mp4").as("mimeType"),
       lit(0).as("width"), lit(0).as("height"),
@@ -362,10 +369,15 @@ object Multimodal {
       col("meta.sampleRateHz"), col("meta.channels")))
 
   /** Frame sampling for video rows: explode into (id, frame_idx) stubs at
-    * a fixed rate; real impl replaces the payload with the decoded frame. */
-  def sampleFrames(df: DataFrame, everyMs: Long): DataFrame =
+    * a fixed rate; real impl replaces the payload with the decoded frame.
+    * A video of unknown (0) duration gets the frame at 0 only. */
+  def sampleFrames(df: DataFrame, everyMs: Long): DataFrame = {
+    require(everyMs > 0, "everyMs must be positive")
     df.filter(col("meta.kind") === "video")
       .select(col("id"), col("meta"),
-        explode(sequence(lit(0L), col("meta.durationMs"), lit(everyMs)))
-          .as("frame_ms"))
+        explode(transform(
+          TextOps.upTo(lit(0L), call_function("div", col("meta.durationMs"),
+            lit(everyMs))),
+          i => i * everyMs)).as("frame_ms"))
+  }
 }

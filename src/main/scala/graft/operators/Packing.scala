@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  private def wsTokens(text: org.apache.spark.sql.Column) =
-    TextOps.wsTokens(text)
-
   /** Split each document into token windows of `chunkTokens` advancing by
     * `strideTokens` (overlap = chunkTokens - strideTokens). The final
     * window may be shorter; a document shorter than one window yields a
@@ -41,16 +38,6 @@ object Packing {
     require(chunkTokens >= 1, "chunkTokens must be >= 1")
     require(strideTokens >= 1 && strideTokens <= chunkTokens,
       "strideTokens must be in [1, chunkTokens]")
-    // r16: the straightforward `select(toks.as("__toks"), ...)` aliasing
-    // is INLINED by the optimizer (column pruning collapses the
-    // pre-projection into the Generate args and the post-projection), so
-    // the executed plan re-ran the regex split of the WHOLE document
-    // ~5× per doc in the generator guard plus 2× per emitted chunk —
-    // ~2·C+5 full-text splits for a C-chunk document. A lambda binding
-    // (`transform(array(toks), t -> …)`) is opaque to that inlining:
-    // the split evaluates exactly once per document, every per-chunk
-    // expression slices the bound array. Same expressions, same values,
-    // same row order — only the evaluation count changes.
     def chunksOf(t: org.apache.spark.sql.Column) = {
       val n = size(t)
       // 1 + ceil(max(0, n - chunk) / stride); ints are far below 2^53 so
@@ -58,10 +45,7 @@ object Packing {
       val nChunks = when(n === 0, lit(0)).otherwise(
         (floor((greatest(n - chunkTokens, lit(0)) + (strideTokens - 1))
           / strideTokens) + 1).cast("int"))
-      // sequence(0, -1) would auto-step backwards — guard the empty case
-      val chunkIds = when(nChunks >= 1, sequence(lit(0), nChunks - 1))
-        .otherwise(array().cast("array<int>"))
-      transform(chunkIds, i => struct(
+      transform(TextOps.upTo(lit(0), nChunks - 1), i => struct(
         i.as("chunk_id"),
         concat_ws(" ", slice(t, i * strideTokens + 1, lit(chunkTokens)))
           .as("chunk_text"),
@@ -69,8 +53,7 @@ object Packing {
           .cast("long").as("n_tokens")))
     }
     df.select(col(idCol),
-        explode(flatten(transform(
-          array(wsTokens(col(textCol))), t => chunksOf(t)))).as("__c"))
+        TextOps.explodeOnce(TextOps.wsTokens(col(textCol)))(chunksOf).as("__c"))
       .select(col(idCol), col("__c.chunk_id").as("chunk_id"),
         col("__c.chunk_text").as("chunk_text"),
         col("__c.n_tokens").as("n_tokens"))

@@ -31,15 +31,7 @@ object RangeJoin {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val fb = facts.withColumn("__bucket",
       expr(s"`$pointCol` div $bucketWidth"))
-    // empty/inverted ranges ([s, e) with e <= s) must cost nothing:
-    // unguarded, sequence() would auto-step -1 and fan them across
-    // descending junk buckets (correct output, quadratic-ish waste)
-    val rb = ranges.withColumn("__bucket",
-      explode(when(col(endCol) > col(startCol),
-        sequence(
-          expr(s"`$startCol` div $bucketWidth"),
-          expr(s"(`$endCol` - 1) div $bucketWidth")))
-        .otherwise(array().cast("array<long>"))))
+    val rb = buckets(ranges, startCol, endCol, bucketWidth)
     fb.join(rb, Seq("__bucket"))
       .filter(col(pointCol) >= col(startCol) && col(pointCol) < col(endCol))
       .drop("__bucket")
@@ -61,18 +53,20 @@ object RangeJoin {
       leftKey: String, rightKey: String,
       bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
-    def buckets(df: DataFrame, s: String, e: String): DataFrame =
-      df.withColumn("__bucket",
-        explode(when(col(e) > col(s),
-          sequence(
-            expr(s"`$s` div $bucketWidth"),
-            expr(s"(`$e` - 1) div $bucketWidth")))
-          .otherwise(array().cast("array<long>"))))
-    val lb = buckets(left, ls, le)
-    val rb = buckets(right, rs, re)
+    val lb = buckets(left, ls, le, bucketWidth)
+    val rb = buckets(right, rs, re, bucketWidth)
     lb.join(rb, Seq("__bucket"))
       .filter(col(ls) < col(re) && col(rs) < col(le))
       .drop("__bucket")
       .dropDuplicates(leftKey, rightKey)
   }
+
+  /** Each row of `df` once per bucket its `[s, e)` covers. An empty or
+    * inverted range (e <= s) covers none: its NULL upper bound makes the
+    * range empty instead of fanning it across descending junk buckets. */
+  private def buckets(df: DataFrame, s: String, e: String,
+      bucketWidth: Long): DataFrame =
+    df.withColumn("__bucket", explode(TextOps.upTo(
+      expr(s"`$s` div $bucketWidth"),
+      when(col(e) > col(s), expr(s"(`$e` - 1) div $bucketWidth")))))
 }

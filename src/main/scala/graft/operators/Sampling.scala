@@ -113,11 +113,7 @@ object Sampling {
       w => math.round((w - math.floor(w)) * buckets))
     val copies = (base + when(bucket < fracCutoff, 1L).otherwise(0L))
       .cast("int")
-    // Guard zero copies: sequence(0, -1) auto-steps DOWN to [0, -1]
-    // instead of returning empty, which would keep weight-0 rows.
-    df.withColumn("copy_id",
-      explode(when(copies > lit(0), sequence(lit(0), copies - 1))
-        .otherwise(array().cast("array<int>"))))
+    df.withColumn("copy_id", explode(TextOps.upTo(lit(0), copies - 1)))
   }
 
   /** Deterministic global shuffle for training order: every row gets a

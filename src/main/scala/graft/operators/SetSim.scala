@@ -56,13 +56,9 @@ object SetSim {
     * working set both the prefix index and the verify join read. */
   private[graft] def orderedTokens(
       df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = df
-      // explode(filter(array(…))) binding: tokenize once per doc — a
-      // plain alias + size filter is inlined into both Filter and
-      // Project by the optimizer and ran the tokenize twice
-      .select(col(idCol).as("id"),
-        explode(filter(array(tokensOf(col(textCol))),
-          t => size(t) > 0)).as("toks"))
+    val tok = df.select(col(idCol).as("id"),
+      TextOps.explodeOnceIf(tokensOf(col(textCol)))(t => size(t) > 0)
+        .as("toks"))
     val exploded = tok.select(col("id"), explode(col("toks")).as("token"))
     val dfreq = exploded.groupBy("token")
       .agg(count(lit(1)).as("dfreq"))

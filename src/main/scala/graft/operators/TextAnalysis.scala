@@ -285,20 +285,11 @@ object TextAnalysis {
     val toks = TextOps.tokens(col(textCol))
     // every token occurrence, paired with its successor (NULL at the
     // doc's last token — the guard also keeps ANSI element_at in bounds)
-    // r16: tokenize bound as a lambda variable (`transform(array(toks),
-    // t -> …)`) — the previous alias + size filter was inlined by the
-    // optimizer into both the Filter and the Generate, running the regex
-    // tokenize (this operator's dominant cost) TWICE per document per
-    // pass. The empty-doc guard folds into the lambda (sequence(1, 0)
-    // would step backwards; an empty array explodes to no rows ≡ the
-    // dropped-row filter).
     def stream: DataFrame = df
-      .select(col(idCol), explode(flatten(transform(array(toks), t =>
-        when(size(t) >= 1, transform(
-          sequence(lit(1), size(t)),
+      .select(col(idCol), TextOps.explodeOnce(toks)(t =>
+        transform(TextOps.upTo(lit(1), size(t)),
           i => struct(element_at(t, i).as("w1"),
             when(i < size(t), element_at(t, i + 1)).as("w2"))))
-          .otherwise(array().cast("array<struct<w1:string,w2:string>>")))))
         .as("b"))
       .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2"))
     // small (distinct bigrams + per-token end-of-doc sentinels), three
@@ -368,17 +359,11 @@ object TextAnalysis {
     var step = 1
     var exhausted = false
     while (step <= merges && !exhausted) {
-      // split bound as a lambda variable — one split of the symbol
-      // string per row instead of one in the filter and one in the
-      // generate (the bigramNll note)
       val best = words
-        .select(col("cnt"), explode(flatten(transform(
-          array(split(col("sym"), " ")), t =>
-            when(size(t) >= 2, transform(
-              sequence(lit(1), size(t) - 1),
-              i => struct(element_at(t, i).as("l"),
-                element_at(t, i + 1).as("r"))))
-              .otherwise(array().cast("array<struct<l:string,r:string>>")))))
+        .select(col("cnt"), TextOps.explodeOnce(split(col("sym"), " "))(t =>
+          transform(TextOps.upTo(lit(1), size(t) - 1),
+            i => struct(element_at(t, i).as("l"),
+              element_at(t, i + 1).as("r"))))
           .as("p"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum(col("cnt")).as("c"))
@@ -507,16 +492,15 @@ object TextAnalysis {
   }
 
   /** One greedy left-to-right merge pass of pair (l, r) over a
-    * space-joined symbol string, as a string-accumulator fold. */
-  private def mergeFold(sym: Column, l: String, r: String): Column = {
-    val toks = split(sym, " ")
-    aggregate(
-      slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-      element_at(toks, 1),
-      (acc, x) => when(
-        (acc === lit(l) || acc.endsWith(lit(" " + l))) && x === lit(r),
-        concat(acc, x)).otherwise(concat(acc, lit(" "), x)))
-  }
+    * space-joined symbol string, as a string-accumulator fold. `sym`
+    * occurs once, so `bpeEncode`'s chain of folds splits each word once
+    * per merge rather than 3^merges times. */
+  private def mergeFold(sym: Column, l: String, r: String): Column =
+    aggregate(split(sym, " "), lit(null).cast("string"), (acc, x) =>
+      when(acc.isNull, x)
+        .when((acc === lit(l) || acc.endsWith(lit(" " + l))) && x === lit(r),
+          concat(acc, x))
+        .otherwise(concat(acc, lit(" "), x)))
 
   /** Tokenize text with a learned merge list: the same greedy fold per
     * word, applied in merge order — the inference side of `bpeTrain`.

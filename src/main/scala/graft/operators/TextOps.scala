@@ -26,11 +26,32 @@ object TextOps {
       array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
+  /** The ascending inclusive range `lo..hi`: empty when `hi < lo` or `hi`
+    * is NULL (a bare `sequence(0, -1)` steps down to `[0, -1]`). The
+    * element type follows `lo` and `hi`, so no empty-array cast is
+    * spelled out. */
+  def upTo(lo: Column, hi: Column): Column =
+    when(hi >= lo, sequence(lo, hi)).otherwise(slice(sequence(lo, lo), 1, 0))
+
+  /** Generator over `f(v)` (an array) that evaluates `v` once per row.
+    * `v` is bound as a lambda variable: the optimizer inlines a plain
+    * alias into every consumer, so `select(split(…).as("t"))
+    * .filter(size(t) > 1)` then explode runs the split in the Filter and
+    * again in the Generate, and collapsed projections repeat it per use;
+    * a lambda argument is opaque to that inlining. An empty `f(v)`
+    * yields no row. */
+  def explodeOnce(v: Column)(f: Column => Column): Column =
+    explode(flatten(transform(array(v), f)))
+
+  /** Generator over `v` itself: one row where `p(v)` holds, none
+    * otherwise; `v` evaluated once per row (see `explodeOnce`). */
+  def explodeOnceIf(v: Column)(p: Column => Column): Column =
+    explode(filter(array(v), p))
+
   /** Word n-gram shingles ("a b c" for n=3) from a token array. */
   def wordNgrams(toks: Column, n: Int): Column =
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
+    transform(upTo(lit(1), size(toks) - (n - 1)),
+      i => concat_ws(" ", slice(toks, i, lit(n))))
 
   /** Character n-gram shingles of a string. */
   def charShingles(c: Column, n: Int): Column =

@@ -348,6 +348,23 @@ class MultimodalSpec extends SparkSpec {
     assert(rows.forall(_.isNullAt(1)))
   }
 
+  test("an unknown (all-ones) mp4 duration reads as 0 and samples one " +
+    "frame; a large duration converts to ms without overflow") {
+    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ be32(0))
+    val large = 1L << 60
+    val media = Multimodal.withDecodedMeta(Seq(
+      (1L, ftyp ++ box("moov", mvhdV1(1000L, -1L))),
+      (2L, ftyp ++ box("moov", mvhdV1(90000L, large)))
+    ).toDF("id", "payload"), "id", "payload", "video")
+    val ms = media.orderBy("id").select($"meta.durationMs").collect()
+      .map(_.getLong(0)).toSeq
+    assert(ms == Seq(0L, (BigInt(large) * 1000 / 90000).toLong))
+    val frames = Multimodal.sampleFrames(media.filter($"id" === 1L), 60000L)
+      .select($"frame_ms").collect().map(_.getLong(0)).toSeq
+    assert(frames == Seq(0L))
+    assertThrows[IllegalArgumentException](Multimodal.sampleFrames(media, 0L))
+  }
+
   // ---- frame-level PCM16 features --------------------------------------
 
   private def wav(samples: Array[Int]): Array[Byte] = {

@@ -431,9 +431,9 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     object Walk extends AdaptiveSparkPlanHelper
-    // the operators bind each tokenize as a lambda variable; a plain
-    // alias + filter(size(...)) would be inlined by the optimizer into
-    // both the Filter and the Generate, so the same split/shingle
+    // the operators bind each tokenize with TextOps.explodeOnce(If); a
+    // plain alias + filter(size(...)) would be inlined by the optimizer
+    // into both the Filter and the Generate, so the same split/shingle
     // expression would appear (and run) twice in one plan. A cached
     // relation's build plan is checked as a plan of its own.
     val captured = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
@@ -447,20 +447,35 @@ class PlanSpec extends SparkSpec {
     }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
+    import scala.jdk.CollectionConverters._
+    // the plans each binding site ran, so every site is shown to be checked
+    val plansOf = scala.collection.mutable.LinkedHashMap.empty[String, Seq[SparkPlan]]
+    def capture(site: String)(body: => Unit): Unit = {
+      captured.clear()
+      body
+      org.apache.spark.SpecBridge.drainListeners(spark.sparkContext)
+      plansOf(site) = captured.asScala.toSeq
+    }
     spark.listenerManager.register(listener)
     try {
-      for (q <- Seq("q145_chunk_overlap", "q166_bigram_lm",
-          "q168_shared_spans", "q187_containment")) {
-        val df = Queries.byName(q).run(spark, dir)
-        noop(df)
-        WorkingSet.release(df)
+      // q52 ngramJaccardPairs, q53 simhashNearDups, q145 Packing.chunk,
+      // q166 bigramNll, q168 sharedSpans, q171 bpeTrain, q187
+      // containmentPairs plus its quote planting, q226 SetSim
+      for (q <- Seq("q52_ngram_jaccard", "q53_dedup_simhash",
+          "q145_chunk_overlap", "q166_bigram_lm", "q168_shared_spans",
+          "q171_bpe_train", "q187_containment", "q226_setsim_exact"))
+        capture(q) {
+          val df = Queries.byName(q).run(spark, dir)
+          noop(df)
+          WorkingSet.release(df)
+        }
+      capture("buildMinhashIndex") {
+        val idx = graft.operators.Dedup.buildMinhashIndex(
+          Tables.load(spark, dir, "documents"), "doc_id", "text")
+        WorkingSet.using(idx.shingled, idx.banded) {
+          noop(graft.operators.Dedup.minhashPipeline(idx, 0.5, 1000))
+        }
       }
-      val idx = graft.operators.Dedup.buildMinhashIndex(
-        Tables.load(spark, dir, "documents"), "doc_id", "text")
-      WorkingSet.using(idx.shingled, idx.banded) {
-        noop(graft.operators.Dedup.minhashPipeline(idx, 0.5, 1000))
-      }
-      org.apache.spark.SpecBridge.drainListeners(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
 
     def nodes(p: SparkPlan): Seq[SparkPlan] = Walk.collectWithSubqueries(p) {
@@ -473,22 +488,24 @@ class PlanSpec extends SparkSpec {
       case e: StringSplit => e.canonicalized
       case e: graft.functions.ShingleSet => e.canonicalized
     })
-    import scala.jdk.CollectionConverters._
     // each tokenize must occur once in its plan — not once in a Filter
     // and again in the Project or Generate above it. A scan's
     // DataFilters only prune files, so they don't count.
     val checked = for {
-      p <- captured.asScala.toSeq.flatMap(withCacheBuilds)
+      (site, plans) <- plansOf.toSeq
+      p <- plans.flatMap(withCacheBuilds)
       all = tokenizes(nodes(p).flatMap {
         case _: FileSourceScanExec => Nil
         case n => n.expressions
       })
       e <- all.distinct
-    } yield (e, all.count(_ == e), p)
-    assert(checked.size >= 5, s"expected tokenizing plans, got ${checked.size}")
-    val twice = checked.filter(_._2 != 1)
-    assert(twice.isEmpty, twice.map { case (e, n, p) =>
-      s"${e.prettyName} evaluated ${n}× in one plan:\n${p.treeString.take(3000)}"
+    } yield (site, e, all.count(_ == e), p)
+    val unchecked = plansOf.keys.toSet -- checked.map(_._1)
+    assert(unchecked.isEmpty, s"no tokenizing plan captured for $unchecked")
+    val twice = checked.filter(_._3 != 1)
+    assert(twice.isEmpty, twice.map { case (site, e, n, p) =>
+      s"$site: ${e.prettyName} evaluated ${n}× in one plan:\n" +
+        p.treeString.take(3000)
     }.mkString("\n"))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{TextOps, Vectors}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -407,6 +408,43 @@ class PropertySpec extends SparkSpec {
       }
       assert(t.statements.mkString(";") == s, s"trial $trial: $shown")
     }
+  }
+
+  test("TextOps.upTo ≡ Scala lo to hi on random int and long bounds") {
+    // mismatches of `range` against `lo to hi` (empty for a NULL hi)
+    def mismatches[T](pairs: Seq[(T, Option[T])], range: (Column, Column) => Column)(
+        implicit num: Integral[T], enc: org.apache.spark.sql.Encoder[(T, Option[T])]): Seq[String] = {
+      val got = pairs.toDS().select(range(col("_1"), col("_2"))).collect()
+        .map(r => Option(r.getSeq[T](0)).map(_.toSeq))
+      pairs.zip(got).collect {
+        case ((lo, hi), g) if !g.contains(hi.fold(Seq.empty[T])(
+            h => scala.collection.immutable.NumericRange.inclusive(lo, h, num.one))) =>
+          s"upTo($lo, $hi) = $g"
+      }
+    }
+    // short spans (ascending, single point, descending), a NULL hi, and
+    // descending pairs far enough apart that hi - lo overflows
+    def cases[T](draw: () => T, wide: Seq[(T, T)])(implicit num: Integral[T]) = {
+      val near = Seq.fill(200) {
+        val lo = draw()
+        val hi = num.plus(lo, num.fromInt(rnd.nextInt(21) - 10))
+        (lo, if (rnd.nextInt(8) == 0) None else Some(hi))
+      }.filter { case (lo, hi) => // drop spans that wrapped around
+        hi.forall(h => (BigInt(num.toLong(h)) - num.toLong(lo)).abs <= 10)
+      }
+      (near, wide.map { case (lo, hi) => (lo, Option(hi)) })
+    }
+    val (nearInts, wideInts) = cases[Int](() => rnd.nextInt(),
+      Seq((Int.MaxValue, Int.MinValue), (1 << 30, -(1 << 30)),
+        (Int.MaxValue - 2, Int.MaxValue)))
+    val (nearLongs, wideLongs) = cases[Long](() => rnd.nextLong(),
+      Seq((Long.MaxValue, Long.MinValue), (1L << 62, -(1L << 62)),
+        (Long.MinValue, Long.MinValue + 2)))
+    assert(mismatches(nearInts ++ wideInts, TextOps.upTo).isEmpty)
+    assert(mismatches(nearLongs ++ wideLongs, TextOps.upTo).isEmpty)
+    // a bare sequence steps down for hi < lo and is NULL for a NULL hi
+    assert(mismatches(nearInts, sequence(_, _)).nonEmpty)
+    assert(mismatches(nearLongs, sequence(_, _)).nonEmpty)
   }
 }
 

@@ -133,8 +133,8 @@ def forbid(pattern, allowed, home, what):
         if base == home:
             continue
         for n, line in enumerate(open(path, encoding="utf-8"), 1):
-            code = line.split("//")[0]
-            if code.lstrip().startswith("*") or not pattern.search(code):
+            code = re.sub(r"/\*.*?\*/", "", line.split("//")[0])
+            if code.lstrip().startswith(("*", "/*")) or not pattern.search(code):
                 continue
             if not any(base == f and snippet in code for f, snippet in allowed):
                 drift.append(f"{os.path.relpath(path, REPO)}:{n}: {what}: "
@@ -155,6 +155,15 @@ SCANNER_ALLOWED = {
 }
 forbid(SCANNER, SCANNER_ALLOWED, "HiveQlText.scala",
        "hand-rolled HiveQL scanner outside HiveQlText")
+
+# Array vocabulary: a value bound once per row (`explodeOnce`,
+# `explodeOnceIf`) and the possibly-empty index range (`upTo`) are spelled
+# in graft/operators/TextOps.scala only, so no operator again pastes a
+# lambda binding or a hand-typed empty array.
+ARRAYS = re.compile(r"transform\(array\(|filter\(array\(|"
+                    r"\.otherwise\(\s*array\(\)\.cast\(")
+forbid(ARRAYS, {}, "TextOps.scala",
+       "pasted tokenize-once binding or typed empty array outside TextOps")
 
 for d in drift:
     print("DRIFT:", d)
