@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Queries are forced
@@ -7,6 +6,11 @@ import org.apache.spark.sql.SparkSession
   * count() would let Catalyst elide.
   */
 object Bench {
+  /** One query's timed series: lower-median, min and max seconds (-1 when
+    * it failed) and the classes compiled during its timed runs. */
+  private final case class Timing(name: String, med: Double, mn: Double, mx: Double,
+      compiles: Long)
+
   /** Representative slice of SURVEY §2: scan+agg, join+topN, 6-table
     * join, multi-distinct, window, grouping sets, time window, explode
     * word count, exact + LSH dedup, ANN, text analysis, ngrams. */
@@ -54,14 +58,10 @@ object Bench {
     val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
       new java.io.File("target/jvm-tmp").getAbsolutePath)
     new java.io.File(localDir).mkdirs()
-    val builder = SparkSession.builder()
+    val builder = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.local.dir", localDir)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")
     // A/B hook for config experiments (guide §1.2: config LAST, and
     // only measured): SPARK_GRAFT_CONF="k=v;k=v" overlays arbitrary
@@ -102,7 +102,11 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "2").toInt)
     def contendedSeries(mn: Double, mx: Double): Boolean =
       mn > 0 && mx / mn > 1.5 && (mx - mn) > 0.3
-    def measurePass(): Seq[(String, Double, Double, Double)] = selected.map { name =>
+    // Classes Janino compiled so far in this JVM: a warm run that still
+    // compiles is paying codegen on every run (see GraftSession.builder).
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def measurePass(): Seq[Timing] = selected.map { name =>
       var ok = true
       def timed(): Double = {
         val t0 = System.nanoTime()
@@ -118,6 +122,7 @@ object Bench {
         (ts((ts.size - 1) / 2), ts.head, ts.last) // lower median
       }
       timed() // warmup, untimed
+      val compilesBefore = compiles
       var (med, mn, mx) = series()
       var attempt = 0
       while (ok && attempt < retries && contendedSeries(mn, mx)) {
@@ -138,15 +143,16 @@ object Bench {
           if (x2 / n2 < mx / mn) { mn = n2; mx = x2 }
         }
       }
-      if (ok) (name, med, mn, mx) else (name, -1.0, -1.0, -1.0)
+      val timedCompiles = compiles - compilesBefore
+      if (ok) Timing(name, med, mn, mx, timedCompiles)
+      else Timing(name, -1.0, -1.0, -1.0, timedCompiles)
     }
-    def passContended(rs: Seq[(String, Double, Double, Double)]): Boolean =
-      rs.exists { case (_, med, mn, mx) => med > 0 && contendedSeries(mn, mx) }
-    def passOk(rs: Seq[(String, Double, Double, Double)]): Set[String] =
-      rs.collect { case (k, med, _, _) if med >= 0 => k }.toSet
-    def passTotalOver(rs: Seq[(String, Double, Double, Double)],
-        common: Set[String]): Double =
-      rs.collect { case (k, med, _, _) if med >= 0 && common(k) => med }.sum
+    def passContended(rs: Seq[Timing]): Boolean =
+      rs.exists(t => t.med > 0 && contendedSeries(t.mn, t.mx))
+    def passOk(rs: Seq[Timing]): Set[String] =
+      rs.collect { case t if t.med >= 0 => t.name }.toSet
+    def passTotalOver(rs: Seq[Timing], common: Set[String]): Double =
+      rs.collect { case t if t.med >= 0 && common(t.name) => t.med }.sum
     var results = measurePass()
     // Converge-to-idle (VERDICT r13 #8): when per-query retries could
     // not clear the spread gate, wait for the box to go idle (1-min
@@ -177,25 +183,27 @@ object Bench {
           passTotalOver(second, common) < passTotalOver(results, common))
         results = second
     }
-    val qs = results.map { case (k, med, _, _) => "\"" + k + "\":" + med }
+    val qs = results.map(t => "\"" + t.name + "\":" + t.med)
       .mkString("{", ",", "}")
-    val spread = results.map { case (k, _, mn, mx) =>
-      "\"" + k + "\":{\"min\":" + mn + ",\"max\":" + mx + ",\"runs\":" + runs + "}"
+    val spread = results.map { t =>
+      "\"" + t.name + "\":{\"min\":" + t.mn + ",\"max\":" + t.mx + ",\"runs\":" + runs + "}"
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    // generated classes compiled during each query's timed runs (retried
+    // series included): 0 once the codegen cache holds the working set
+    val codegen = results.map(t => "\"" + t.name + "\":" + t.compiles)
+      .mkString("{", ",", "}")
+    val total = results.map(_.med).filter(_ >= 0).sum
     // contention self-identification: machine load around the run and the
     // worst per-query max/min ratio — an idle-box run has spreadMax near
     // 1; a contended one (VERDICT r07: 3-13x) flags itself
     val loadAfter = s"$loadBefore|${loadavg()}"
     val spreadMax = results.collect {
-      case (_, med, mn, mx) if med > 0 && mn > 0 => mx / mn
+      case t if t.med > 0 && t.mn > 0 => t.mx / t.mn
     }.foldLeft(1.0)(math.max)
     // the artifact's own verdict: true when, even after the bounded
     // retries above, some query still fails the spread gate — readers
     // of round-over-round diffs should discount this run
-    val contended = results.exists { case (_, med, mn, mx) =>
-      med > 0 && contendedSeries(mn, mx)
-    }
+    val contended = passContended(results)
     // Corpus fingerprint (untimed): per-table row count + an order-
     // independent content hash (bit_xor of xxhash64 over all columns —
     // commutative, overflow-free under ANSI). The driver regenerates
@@ -223,7 +231,7 @@ object Bench {
     val corpusFp = java.lang.Long.toHexString(
       corpusEntries.foldLeft(0L) { case (a, (_, n, h)) => a ^ n ^ h })
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"corpus":$corpus,"corpus_fp":"$corpusFp","load":"$loadAfter","spread_max":$spreadMax,"contended":$contended,"converge_rerun":$convergeRerun,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"codegen_compiles":$codegen,"corpus":$corpus,"corpus_fp":"$corpusFp","load":"$loadAfter","spread_max":$spreadMax,"contended":$contended,"converge_rerun":$convergeRerun,"sf":"$sfDir"}"""
     // full-fidelity artifact on disk — the driver's stdout capture window
     // is finite, so the printed line is a COMPACT summary (3-decimal
     // medians, single corpus fingerprint) guaranteed to fit and parse
@@ -232,7 +240,7 @@ object Bench {
     val w = new java.io.PrintWriter(outFile, "UTF-8")
     try w.println(full) finally w.close()
     def r3(x: Double): String = if (x < 0) "-1" else f"$x%.3f"
-    val qs3 = results.map { case (k, med, _, _) => "\"" + k + "\":" + r3(med) }
+    val qs3 = results.map(t => "\"" + t.name + "\":" + r3(t.med))
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs3,"corpus_fp":"$corpusFp","load":"$loadAfter","spread_max":${f"$spreadMax%.2f"},"contended":$contended,"converge_rerun":$convergeRerun,"detail":"target/bench.json","sf":"$sfDir"}""")
     spark.stop()

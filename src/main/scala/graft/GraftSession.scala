@@ -10,8 +10,32 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   */
 object GraftSession {
 
+  /** Entries in Spark's generated-class cache (see `builder`). */
+  val CodegenCacheEntries = 4096
+
   /** Builder preloaded with the graft extensions + recommended confs;
-    * callers add master/app/warehouse and build. */
+    * callers add master/app/warehouse and build. Every session the
+    * engine builds (Bench, Verify, the specs, the drives) starts here.
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes the JVM-wide LRU cache
+    * of compiled generated classes. It is a static conf read once, when
+    * the first session generates code, so whichever session does that
+    * fixes it for the JVM. Spark's default of 100 entries is smaller than
+    * the engine's working set: the five `llm_ops_sf01` queries compile
+    * about 150 classes per pass, the 46 `Bench.headline` queries 854 at
+    * sf0.01, and the whole 235-query registry 2788 at sf0.001. At 100,
+    * every run evicted and recompiled its classes (Janino plus the
+    * class-loader lookups it triggers were about a quarter of a warm
+    * profile). 4096 keeps the whole registry resident with headroom;
+    * that costs about 46 MB more metaspace (221 MB against 175 MB at
+    * the default). A caller's own `.config` of the key still wins.
+    *
+    * The cache is keyed on the generated source text, and by default the
+    * class name carries the whole-stage codegen stage id. Under AQE the
+    * ids follow the order in which query stages finish, so the same
+    * pipeline got another id, and was compiled again, on some runs
+    * (q153, q228). `useIdInClassName=false` names every pipeline class
+    * `GeneratedIterator`; the id stays in the generated code's comment. */
   def builder(): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new GraftExtensions())
@@ -19,6 +43,8 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Local session sized to the machine (shuffle partitions = cores, not
     * the 200 default that fragments small-cluster runs). */

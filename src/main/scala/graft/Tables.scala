@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog bootstrap: the reference resolves table names against its
   * metastore (ref: metastore/if/hive_metastore.thrift:266-281); here the
@@ -28,7 +29,7 @@ object Tables {
       // the catch so it fails loudly instead of silently reading raw int64
       // as nanos and dividing a micros value by 1000.
       val inferred: Option[DataFrame] =
-        try Some(spark.read.parquet(s"$dir/events.parquet"))
+        try Some(read(spark, s"$dir/events.parquet"))
         catch { case scala.util.control.NonFatal(_) => None }
       inferred match {
         case Some(df) => df.schema("ts").dataType match {
@@ -55,7 +56,49 @@ object Tables {
             .withColumn("ts", org.apache.spark.sql.functions.expr(
               "timestamp_micros(ts div 1000)"))
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else read(spark, s"$dir/$name.parquet")
+  }
+
+  /** What a file's inferred schema depends on: every data file's path,
+    * size and mtime, and the session's parquet confs. */
+  private final case class Stamp(files: Seq[(String, Long, Long)],
+      confs: Map[String, String])
+
+  // Schema inference is a Spark job (~76 ms against ~6.5 ms for a read
+  // given its schema), and the operator queries load their tables on
+  // every run. Weak keys, as for `registered` below.
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.Map[String, (Stamp, StructType)]]())
+
+  private def stamp(spark: SparkSession, path: String): Option[Stamp] =
+    scala.util.Try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toVector.sorted
+      Stamp(files, spark.conf.getAll.filter(_._1.startsWith("spark.sql.parquet.")))
+    }.toOption
+
+  /** `spark.read.parquet(path)`, inferring the schema only the first time
+    * a session reads these files; a rewrite (size or mtime) or a parquet
+    * conf change infers again. A path that cannot be listed reads as
+    * before, so its error is Spark's own. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val known = schemas.synchronized {
+      schemas.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]())
+    }
+    val st = stamp(spark, path)
+    Option(known.get(path)).filter(e => st.contains(e._1)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        st.foreach(s => known.put(path, (s, df.schema)))
+        df
+    }
   }
 
   // Re-registering views per query would re-read parquet footers; cache by

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.WorkingSet.{iterate, pin, using}
 
@@ -519,7 +520,12 @@ object Dedup {
       df: DataFrame, idCol: String, vecCol: String,
       k: Int = 8, eps: Double = 0.43, maxCluster: Int = 1000000): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val centroids = base.orderBy("id").limit(k)
+    // the k lowest ids by rank, not `orderBy.limit(k)`: Spark names the
+    // counter in a limit's generated code from a JVM-wide sequence, so a
+    // limit inside a plan compiles new classes on every run
+    val centroids = base
+      .withColumn("rn", row_number().over(Window.orderBy("id")))
+      .filter(col("rn") <= k)
       .select(col("id").as("cid"), col("vec").as("cvec"))
     semanticDedupWith(df, idCol, vecCol, centroids, eps, maxCluster)
   }

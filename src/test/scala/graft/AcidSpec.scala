@@ -511,31 +511,6 @@ class AcidSpec extends SparkSpec {
     assert(rows(Acid.snapshot(spark, t)) == rows(seed(10)))
   }
 
-  /** Spark jobs `f` launches on this thread's job group, counted after
-    * the listener bus has delivered every event. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"acid-spec-jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-          _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    org.apache.spark.SpecBridge.drainListeners(sc)
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "counted")
-    try {
-      f
-      org.apache.spark.SpecBridge.drainListeners(sc)
-      n.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
-
   test("building a snapshot over base + deltas launches no Spark job") {
     val t = tmpTable()
     Acid.create(t)

@@ -9,6 +9,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // shared session — never stop per-suite
+
+  /** Spark jobs `f` launches on this thread's job group, counted after
+    * the listener bus has delivered every event. */
+  protected def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"spec-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+          _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    org.apache.spark.SpecBridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "counted")
+    try {
+      f
+      org.apache.spark.SpecBridge.drainListeners(sc)
+      n.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
 }
 
 object SparkSpec {
@@ -25,13 +50,11 @@ object SparkSpec {
   }
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new GraftExtensions())
+    val s = GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.local.dir", localDir)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

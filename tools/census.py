@@ -113,8 +113,8 @@ print(f"test registrations: {test_regs}")
 # graft/WorkingSet.scala only (scoped working set, iterate round, result
 # pin), so no operator can again decide on its own when blocks may be
 # dropped. Each allowlisted call site carries its reason.
-LIFECYCLE = re.compile(r"\.(?:persist|localCheckpoint|checkpoint|unpersist|"
-                       r"cache|cacheTable|uncacheTable)\(|CheckpointBridge")
+LIFECYCLE = re.compile(r"\.\s*(?:persist|localCheckpoint|checkpoint|unpersist|"
+                       r"cache|cacheTable|uncacheTable)\s*\(|CheckpointBridge")
 LIFECYCLE_ALLOWED = {
     ("GraftSession.scala", "spark.catalog.cacheTable(name)"):
         "FROM-source temp view that already exists: cached in place, "
@@ -124,21 +124,59 @@ LIFECYCLE_ALLOWED = {
 }
 
 
+def code_of(text):
+    """`text` with its comments blanked to spaces, newlines kept, so a
+    match offset still maps to its line. String literals stay code."""
+    out, i, n = [], 0, len(text)
+    while i < n:
+        char = re.match(r"'(?:\\.|[^\\'\n])'", text[i:i + 4])
+        comment = False
+        if text.startswith('"""', i):
+            j = text.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+        elif char:
+            j = i + len(char.group())
+        elif text[i] == '"':
+            j = i + 1
+            while j < n and text[j] not in '"\n':
+                j += 2 if text[j] == "\\" else 1
+            j = min(j + 1, n)
+        elif text.startswith("//", i):
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+            comment = True
+        elif text.startswith("/*", i):
+            j = text.find("*/", i + 2)
+            j = n if j < 0 else j + 2
+            comment = True
+        else:
+            j = i + 1
+        out.append(re.sub(r"[^\n]", " ", text[i:j]) if comment else text[i:j])
+        i = j
+    return "".join(out)
+
+
 def forbid(pattern, allowed, home, what):
-    """Flag each code line under SRC outside `home` that matches `pattern`,
-    unless an allowed (file, snippet) entry covers it."""
+    """Flag each match of `pattern` in the code (comments blanked) of the
+    files under SRC other than `home`, unless an allowed (file, snippet)
+    entry covers it. Matching runs on the whole file text, so a pattern
+    written with \\s* also catches a call split across lines."""
     for path in sorted(glob.glob(os.path.join(SRC, "**", "*.scala"),
                                  recursive=True)):
         base = os.path.basename(path)
         if base == home:
             continue
-        for n, line in enumerate(open(path, encoding="utf-8"), 1):
-            code = re.sub(r"/\*.*?\*/", "", line.split("//")[0])
-            if code.lstrip().startswith(("*", "/*")) or not pattern.search(code):
-                continue
-            if not any(base == f and snippet in code for f, snippet in allowed):
-                drift.append(f"{os.path.relpath(path, REPO)}:{n}: {what}: "
-                             f"{line.strip()}")
+        text = open(path, encoding="utf-8").read()
+        code = code_of(text)
+        code_lines, text_lines = code.split("\n"), text.split("\n")
+        for m in pattern.finditer(code):
+            first = code.count("\n", 0, m.start())
+            last = code.count("\n", 0, m.end())
+            span = " ".join(l.strip() for l in code_lines[first:last + 1])
+            if not any(base == f and snippet in span for f, snippet in allowed):
+                shown = " / ".join(l.strip() for l in text_lines[first:last + 1])
+                drift.append(f"{os.path.relpath(path, REPO)}:{first + 1}: "
+                             f"{what}: {shown}")
 
 
 forbid(LIFECYCLE, LIFECYCLE_ALLOWED, "WorkingSet.scala",
@@ -148,7 +186,8 @@ forbid(LIFECYCLE, LIFECYCLE_ALLOWED, "WorkingSet.scala",
 # decided in graft/HiveQlText.scala only, so no scanner can again disagree
 # with the others about quotes, escapes or comments. Each allowlisted site
 # carries its reason.
-SCANNER = re.compile(r"var quote\b|quote: Char|codeMask\(|var inStr\b")
+SCANNER = re.compile(r"var\s+quote\b|quote\s*:\s*Char|codeMask\s*\(|"
+                     r"var\s+inStr\b")
 SCANNER_ALLOWED = {
     ("QtestRunner.scala", "var inStr = false"):
         "balancedParen scans Java source (a UDF's class text), not HiveQL",
@@ -160,10 +199,18 @@ forbid(SCANNER, SCANNER_ALLOWED, "HiveQlText.scala",
 # `explodeOnceIf`) and the possibly-empty index range (`upTo`) are spelled
 # in graft/operators/TextOps.scala only, so no operator again pastes a
 # lambda binding or a hand-typed empty array.
-ARRAYS = re.compile(r"transform\(array\(|filter\(array\(|"
-                    r"\.otherwise\(\s*array\(\)\.cast\(")
+ARRAYS = re.compile(r"transform\(\s*array\s*\(|filter\(\s*array\s*\(|"
+                    r"\.otherwise\(\s*array\s*\(\s*\)\s*\.\s*cast\(")
 forbid(ARRAYS, {}, "TextOps.scala",
        "pasted tokenize-once binding or typed empty array outside TextOps")
+
+# One session recipe: the codegen cache size and the other confs the
+# engine depends on are set in GraftSession.builder, and a static conf
+# is fixed by the first session that uses it, so every session under SRC
+# is built there.
+BUILDER = re.compile(r"SparkSession\s*\.\s*builder\b")
+forbid(BUILDER, {}, "GraftSession.scala",
+       "SparkSession.builder outside GraftSession.builder")
 
 for d in drift:
     print("DRIFT:", d)
