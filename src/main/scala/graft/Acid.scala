@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,11 +33,19 @@ import org.apache.spark.sql.types._
   * Snapshot semantics (`AcidUtils.getAcidState`, `OrcRawRecordMerger`):
   * pick the highest base, then the non-subsumed deltas above it, and for
   * each row identity let the event with the highest currentTransaction
-  * win; a winning delete removes the row. The reference merges
-  * sorted-ORC streams per bucket; here the same resolution is ONE
-  * map-side-combinable `max_by` aggregation keyed on the row identity —
-  * a single shuffle whose width is the number of live+dead row versions,
-  * the plan you want at 100 TB.
+  * win; a winning delete removes the row. The reference merges each
+  * base bucket with the delta events as sorted ORC streams, so a read
+  * costs one scan plus the delta events. Here (`resolve`) base and
+  * original rows pass through a left anti join against the identities
+  * the deltas' update and delete events name, and only the delta
+  * events go through the last-event-wins `max_by` aggregate. The
+  * census never selects a delta at or below the base, so any delta
+  * event outranks the base row with the same identity, and the anti
+  * join drops exactly the base rows a delta rewrote. Spark's broadcast
+  * threshold picks the join from the delta files' size: below it the
+  * base is read without a shuffle, and the shuffled data is the delta
+  * events alone; past it the join is a sort-merge join, the cost of a
+  * full merge.
   *
   * Why this layout matters vs `Warehouse.update/delete` (the
   * partition-rewrite path): a mutation here writes O(changed rows) — a
@@ -274,9 +282,8 @@ object Acid {
     * writing task's partition id and rowId a per-bucket sequence —
     * the same writer-local assignment as `OrcRecordUpdater.insert`
     * (bucket file + monotonically increasing rowid), so ids are unique
-    * without any global coordination. The per-bucket row_number is one
-    * shuffle on bucket — the cost of any bucketed write. */
-  private def asInsertEvents(df: DataFrame, w: Long): DataFrame =
+    * without any global coordination and without a shuffle. */
+  private[graft] def asInsertEvents(df: DataFrame, w: Long): DataFrame =
     asInsertEventsKeeping(df, w, df.columns.toSeq, Nil)
 
   /** Write an event frame carrying top-level partition columns into
@@ -516,11 +523,12 @@ object Acid {
     require(df.columns.map(_.toLowerCase).intersect(
       (MetaCols :+ "row").map(_.toLowerCase)).isEmpty,
       "data columns may not collide with ACID event columns")
+    // monotonically_increasing_id is (partition id << 33) + the row's
+    // position in its partition: subtracting the partition part leaves
+    // the per-bucket sequence row_number() over the bucket would give
     df.withColumn("bucket", spark_partition_id())
-      .withColumn("__seq", monotonically_increasing_id())
-      .withColumn("rowId", row_number().over(
-        Window.partitionBy(col("bucket"))
-          .orderBy(col("__seq"))).cast("long") - 1)
+      .withColumn("rowId", monotonically_increasing_id() -
+        shiftleft(spark_partition_id().cast("long"), 33))
       .select(Seq(
         lit(InsertOp).as("operation"),
         lit(w).as("originalTransaction"),
@@ -531,50 +539,32 @@ object Acid {
         partCols.map(col): _*)
   }
 
-  /** Last event per row identity wins; a winning delete drops the row.
-    * max_by over (currentTransaction) is map-side combinable — partial
-    * aggregation resolves most versions before the single shuffle.
-    * Partition columns are GROUPING keys, not payload: every event of a
-    * row identity lives in the row's partition dir (updates cannot move
-    * partitions, deletes are routed to the target), so adding them to
-    * the key never splits a group — and it makes a partition predicate
-    * over the snapshot pushable through the aggregate all the way to the
-    * scan's PartitionFilters. Without this, `snapshot(t).filter(p = x)`
-    * would merge-scan EVERY partition before filtering — the difference
-    * between one partition and 100 TB. */
+  private val IdCols = Seq("originalTransaction", "bucket", "rowId")
+
+  /** Last delta event per row identity wins; a winning delete drops the
+    * row. Only delta events come here (`resolve` keeps base and original
+    * rows out), and max_by over (currentTransaction) is map-side
+    * combinable, so partial aggregation resolves most versions before the
+    * shuffle. Partition columns are GROUPING keys, not payload: every
+    * event of a row identity lives in the row's partition dir (updates
+    * cannot move partitions, deletes are routed to the target), so adding
+    * them to the key never splits a group — and it makes a partition
+    * predicate over the snapshot pushable through the aggregate all the
+    * way to the scan's PartitionFilters. */
   private def mergeEvents(events: DataFrame,
       partCols: Seq[String]): DataFrame =
     events
-      .groupBy((partCols ++
-        Seq("originalTransaction", "bucket", "rowId")).map(col): _*)
+      .groupBy((partCols ++ IdCols).map(col): _*)
       .agg(max_by(struct(col("operation"), col("row")),
         col("currentTransaction")).as("last"))
       .filter(col("last.operation") =!= DeleteOp)
       .select(Seq(
-        struct(col("originalTransaction"), col("bucket"), col("rowId"))
-          .as("row__id"),
+        struct(IdCols.map(col): _*).as("row__id"),
         col("last.row.*")) ++
         partCols.map(col): _*)
 
-  /** Base rows re-wrapped as insert events. `currentTransaction` is the
-    * row's own originalTransaction: the census already excludes every
-    * delta at or below the base, so any surviving delta event outranks
-    * a base row, and no other event of that identity can remain. */
-  private def baseAsEvents(b: DataFrame, partCols: Seq[String]): DataFrame = {
-    val dataCols = b.columns.filterNot(
-      Set("originalTransaction", "bucket", "rowId") ++ partCols)
-    b.select(Seq(
-      lit(InsertOp).as("operation"),
-      col("originalTransaction"),
-      col("bucket"),
-      col("rowId"),
-      col("originalTransaction").as("currentTransaction"),
-      struct(dataCols.map(col): _*).as("row")) ++
-      partCols.map(col): _*)
-  }
-
-  /** Pre-ACID original files as insert events with SYNTHESIZED row
-    * identities, the reference's on-the-fly ROW__ID for originals:
+  /** Pre-ACID original files as rows with SYNTHESIZED row identities,
+    * the reference's on-the-fly ROW__ID for originals:
     * originalTransaction 0, bucket = the file's index within its own
     * directory's sorted file list, rowId = the row's position in its file
     * (`_metadata.row_index` — stable for a given file, so identities
@@ -582,7 +572,7 @@ object Acid {
     * spent synthesizing them). The distinct-path pre-pass is a
     * metadata-column-only scan bounded by file count, and the whole
     * synthesis retires at the first major compaction. */
-  private def originalsAsEvents(spark: SparkSession, basePath: String,
+  private def originalRows(spark: SparkSession, basePath: String,
       files: Seq[File], partCols: Seq[String]): DataFrame = {
     val raw = spark.read.option("basePath", basePath)
       .parquet(files.map(_.toString): _*)
@@ -603,29 +593,9 @@ object Acid {
     val dataCols = raw.columns
       .filterNot(Set("__file", "rowId") ++ partCols)
     raw.join(broadcast(bucketOf), "__file")
-      .select(Seq(
-        lit(InsertOp).as("operation"),
-        lit(0L).as("originalTransaction"),
-        col("bucket"),
-        col("rowId"),
-        lit(0L).as("currentTransaction"),
-        struct(dataCols.map(col): _*).as("row")) ++
-        partCols.map(col): _*)
+      .select(Seq(lit(0L).as("originalTransaction"), col("bucket"),
+        col("rowId")) ++ (dataCols ++ partCols).map(col): _*)
   }
-
-  /** Project resolved insert-only events straight to snapshot form — the
-    * MERGE BYPASS for dirs with no deltas to reconcile: a fully-compacted
-    * (or pure-originals) table reads at plain parquet speed, no aggregate
-    * and no shuffle. This is the payoff the compactor exists for; the
-    * reference likewise serves a delta-free base without the
-    * OrcRawRecordMerger heap. */
-  private def eventsAsSnapshot(events: DataFrame,
-      partCols: Seq[String]): DataFrame =
-    events.select(Seq(
-      struct(col("originalTransaction"), col("bucket"), col("rowId"))
-        .as("row__id"),
-      col("row.*")) ++
-      partCols.map(col): _*)
 
   /** Key under which Spark's parquet writer stores the row schema as JSON
     * in each file's footer (`ParquetReadSupport.SPARK_METADATA_KEY`). */
@@ -651,18 +621,32 @@ object Acid {
       }.flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
       .collect { case s: StructType => s }
 
+  /** `t` with every field, array element and map value nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
   /** The one way to read published base/delta dirs: one scan per
     * distinct footer schema, joined by name (`unionByName` widens
     * differing column types). Passing the stored schema skips Spark's
     * schema-inference job, so building a snapshot launches no job; a
-    * dir's schema is applied only to dirs that stored the same one. Dirs
-    * without Spark's key (another writer, or no data file) fall back to
-    * inference, one dir at a time. `root` is the partition-discovery
-    * base, so partition columns come from the path. */
+    * dir's schema is applied only to dirs that stored the same one up to
+    * nullability (insert, update and delete events each store their own
+    * nullability, and a scan per kind would multiply the scans of every
+    * read). Dirs without Spark's key (another writer, or no data file)
+    * fall back to inference, one dir at a time. `root` is the
+    * partition-discovery base, so partition columns come from the path. */
   private def readPublished(spark: SparkSession, root: String,
       dirs: Seq[File]): Option[DataFrame] = {
     def reader = spark.read.option("basePath", root)
-    val tagged = dirs.map(d => storedSchema(spark, d) -> d.toString)
+    val tagged = dirs.map(d =>
+      storedSchema(spark, d).map(nullable(_).asInstanceOf[StructType]) ->
+        d.toString)
     tagged.map(_._1).distinct.flatMap {
       case Some(s) =>
         Seq(reader.schema(s).parquet(
@@ -678,7 +662,8 @@ object Acid {
     * directory-derived partition columns — plan size is constant in
     * delta and partition count, Catalyst prunes partitions on the
     * inferred columns, and building the snapshot launches no job unless
-    * pre-ACID originals are present. */
+    * pre-ACID originals are present. Base rows are read without a
+    * shuffle; only the delta events are aggregated (`resolve`). */
   def snapshotWithRowId(spark: SparkSession, path: String): DataFrame =
     snapshotWithRowIdAsOf(spark, path, Long.MaxValue)
 
@@ -688,45 +673,58 @@ object Acid {
     * `stateAsOf`, which fails loudly if that history was compacted away
     * and cleaned rather than silently misreading. */
   def snapshotWithRowIdAsOf(spark: SparkSession, path: String,
-      asOf: Long): DataFrame =
-    if (!isPartitioned(path)) {
-      val s = stateAsOf(path, asOf)
-      val deltas = readPublished(spark, path, s.deltas.map(_.dir))
-      val baseEvents = readPublished(spark, path, s.base.map(_._2).toSeq)
-        .map(baseAsEvents(_, Nil))
-      val originalEvents =
-        if (s.originals.isEmpty) None
-        else Some(originalsAsEvents(spark, path, s.originals, Nil))
-      (baseEvents.toSeq ++ originalEvents.toSeq ++ deltas) match {
-        case Seq() => spark.emptyDataFrame
-        case es if s.deltas.isEmpty => // nothing to reconcile
-          es.map(eventsAsSnapshot(_, Nil)).reduce(_ unionByName _)
-        case es => mergeEvents(es.reduce(_ unionByName _), Nil)
-      }
-    } else {
-      val partCols = partitionColsOf(path)
-      val perLeaf = partitionLeaves(path).map(l => stateAsOf(l.toString, asOf))
-      // partitions with deltas pay the merge; delta-free partitions
-      // (base-only or originals-only) bypass it entirely
-      val (dirty, cleanLeaves) = perLeaf.partition(_.deltas.nonEmpty)
-      def eventsOf(leaves: Seq[State]): Seq[DataFrame] =
-        readPublished(spark, path, leaves.flatMap(_.deltas.map(_.dir))).toSeq ++
-          readPublished(spark, path, leaves.flatMap(_.base.map(_._2)))
-            .map(baseAsEvents(_, partCols)) ++ {
-          val orig = leaves.flatMap(_.originals)
-          if (orig.isEmpty) None
-          else Some(originalsAsEvents(spark, path, orig, partCols))
+      asOf: Long): DataFrame = {
+    val leaves = partitionLeaves(path)
+    if (leaves.isEmpty) resolve(spark, path, Nil, Seq(stateAsOf(path, asOf)))
+    else resolve(spark, path, partitionColsOf(path),
+      leaves.map(l => stateAsOf(l.toString, asOf)))
+  }
+
+  /** The snapshot of the dirs `states` select (one state per partition
+    * leaf under `root`, or the root's own). Base and original rows are
+    * kept unless an update or delete event of a selected delta names
+    * their identity (a left anti join on `partCols ++ IdCols`); the delta
+    * events resolve among themselves in `mergeEvents`. Exact, because
+    * the census selects only deltas above the base, so any delta event
+    * outranks the base row it names; insert events carry a write id
+    * above the base and can never name a base row, so they stay off the
+    * join's build side. A table with no deltas is a plain projection of
+    * its rows (the MERGE BYPASS: no join, no aggregate, no shuffle — the
+    * payoff the compactor exists for). */
+  private def resolve(spark: SparkSession, root: String,
+      partCols: Seq[String], states: Seq[State]): DataFrame = {
+    val deltaDirs = states.flatMap(_.deltas.map(_.dir))
+    val deltas = readPublished(spark, root, deltaDirs)
+    // the default partition reads as NULL, and its rows must match like
+    // any other partition's; a null-safe match keeps a partition
+    // predicate off the named identities' scan, so it is used only then
+    val nullSafe = deltaDirs.exists(_.getPath.contains(
+      s"=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"))
+    val originals = states.flatMap(_.originals)
+    val rows = (readPublished(spark, root, states.flatMap(_.base.map(_._2))) ++
+      (if (originals.isEmpty) None
+       else Some(originalRows(spark, root, originals, partCols))))
+      .reduceOption(_ unionByName _)
+    val key = partCols ++ IdCols
+    val live = rows.map { r =>
+      val kept = deltas.fold(r) { d =>
+        val named = d.filter(col("operation") =!= InsertOp)
+          .select(key.map(c => col(c).as(s"__d_$c")): _*)
+        val on = key.map { c =>
+          if (nullSafe && partCols.contains(c)) col(c) <=> col(s"__d_$c")
+          else col(c) === col(s"__d_$c")
         }
-      val merged = eventsOf(dirty) match {
-        case Seq() => None
-        case es    => Some(mergeEvents(es.reduce(_ unionByName _), partCols))
+        r.join(named, on.reduce(_ && _), "left_anti")
       }
-      val bypassed = eventsOf(cleanLeaves).map(eventsAsSnapshot(_, partCols))
-      (merged.toSeq ++ bypassed) match {
-        case Seq() => spark.emptyDataFrame
-        case es    => es.reduce(_ unionByName _)
-      }
+      val dataCols = r.columns.filterNot(key.contains)
+      kept.select(struct(IdCols.map(col): _*).as("row__id") +:
+        (dataCols ++ partCols).map(col): _*)
     }
+    (live.toSeq ++ deltas.map(mergeEvents(_, partCols))) match {
+      case Seq() => spark.emptyDataFrame
+      case es    => es.reduce(_ unionByName _)
+    }
+  }
 
   /** Current committed snapshot (data columns only). */
   def snapshot(spark: SparkSession, path: String): DataFrame =
@@ -777,8 +775,7 @@ object Acid {
       case _ => ()
     }
     if (partCols.forall(pins.contains)) {
-      val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName _
+      val esc = ExternalCatalogUtils.escapePathName _
       Some(partCols.map(c => s"${esc(c)}=${esc(pins(c))}").mkString("/"))
     } else None
   }
@@ -921,7 +918,7 @@ object Acid {
     * `SemanticAnalyzer` merge path): matched rows take the first WHEN
     * clause whose condition holds (update or delete events keeping their
     * ROW__ID), unmatched source rows become insert events — all in a
-    * single `delta_w_w`, one snapshot-source join. The reference's
+    * single `delta_w_w`, from one persisted snapshot-source join. The reference's
     * cardinality check (a target row matching >1 source row is an error)
     * keys on ROW__ID here, which the rewrite-path `Warehouse.merge` has
     * to approximate by whole-row value. */
@@ -961,15 +958,21 @@ object Acid {
     val w = allocateWriteId(path)
     val t = cur.alias(targetAlias)
     val s = source.alias(sourceAlias)
-    // persisted: cardinality check + matched events + anti-join inserts
-    // all read this join; without it the dominant join re-executes per
-    // action (and a nondeterministic source could pass the check yet
-    // write different events)
-    val joined = t.join(s, expr(on), "inner")
+    // persisted: cardinality check, matched events and the inserts all
+    // read this one join; without it the snapshot and the source are
+    // read again per action (and a nondeterministic source could pass
+    // the check yet write different events). With a NOT MATCHED clause
+    // the join keeps every source row: the unmatched ones are the
+    // inserts.
+    val joined =
+      if (notMatched.isEmpty) t.join(s, expr(on), "inner")
+      else s.join(t, expr(on), "left_outer")
+    val targetRowId = col(s"$targetAlias.row__id")
     WorkingSet.using(joined) {
+      val hits = joined.filter(targetRowId.isNotNull)
       // key on (partition, row__id): identities of adopted originals are
       // unique per partition, not table-wide
-      val dup = joined.groupBy(col(s"$targetAlias.row__id") +:
+      val dup = hits.groupBy(targetRowId +:
           partCols.map(c => col(s"$targetAlias.$c")): _*)
         .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).count()
       require(dup == 0,
@@ -985,7 +988,7 @@ object Acid {
           }
           when(c.map(expr).getOrElse(lit(true)), lit(i + 1)).otherwise(els)
       }
-      val withOut = joined.withColumn("__out", outcome)
+      val withOut = hits.withColumn("__out", outcome)
       val rowType = cur.select(struct(dataCols.map(c =>
         col(c)): _*)).schema.head.dataType
       val targetParts = partCols.map(c => col(s"$targetAlias.$c"))
@@ -1018,7 +1021,10 @@ object Acid {
         require(ins.values.size == allCols.length,
           s"MERGE INSERT VALUES arity ${ins.values.size} != " +
             s"${allCols.length} columns of $path")
-        val unmatchedSrc = s.join(t, expr(on), "left_anti")
+        // projected to the source's columns, so an unqualified name in
+        // VALUES or the condition cannot also resolve to the target
+        val unmatchedSrc = joined.filter(targetRowId.isNull)
+          .select(s"$sourceAlias.*").alias(sourceAlias)
           .filter(ins.cond.map(expr).getOrElse(lit(true)))
         val inserted = unmatchedSrc.select(
           ins.values.zip(allCols).map { case (v, c) =>

@@ -35,7 +35,22 @@ object GraftSession {
     * ids follow the order in which query stages finish, so the same
     * pipeline got another id, and was compiled again, on some runs
     * (q153, q228). `useIdInClassName=false` names every pipeline class
-    * `GeneratedIterator`; the id stays in the generated code's comment. */
+    * `GeneratedIterator`; the id stays in the generated code's comment.
+    *
+    * `spark.buffer.pageSize` is the Tungsten memory page. Spark derives
+    * it from the heap: 8 MiB in a 2 GB JVM with 4 cores, 64 MiB in an
+    * 8 GB one. Every `UnsafeHashedRelation` takes at least one page,
+    * however few rows it holds, and a broadcast keeps its page until the
+    * ContextCleaner runs after a GC. Each ACID read with deltas builds
+    * one such relation (`Acid.resolve` broadcasts the identities its
+    * deltas name), so at the derived size the pages of many small
+    * broadcasts pile up: on `perfbench` `hiveql_dml` (`local[4]`, 2 GB
+    * heap) the anti join alone raised `peak_rss_mb` by about 13%. With
+    * 1 MiB pages it fell instead, on 10 of 10 run pairs (median 1429 →
+    * 1287 MB), and on `llm_ops_sf01` too (8 of 8 pairs, 1579 → 1327 MB)
+    * with `ops_per_s` no lower. A task addresses at most 8192 pages, so
+    * 1 MiB caps one task's Tungsten memory at 8 GiB. Like the codegen
+    * cache it is read once, when the SparkContext starts. */
   def builder(): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new GraftExtensions())
@@ -45,6 +60,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.buffer.pageSize", "1m")
 
   /** Local session sized to the machine (shuffle partitions = cores, not
     * the 200 default that fragments small-cluster runs). */

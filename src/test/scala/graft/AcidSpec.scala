@@ -409,7 +409,7 @@ class AcidSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!adoptedPlan.contains("Exchange hashpartitioning") &&
       !adoptedPlan.contains("max_by"), s"not bypassed:\n$adoptedPlan")
-    // partitioned mix: only the delta-bearing partition pays the merge
+    // partitioned mix: only the delta events are aggregated
     val t3 = tmpTable()
     Acid.create(t3)
     Acid.insertTxn(spark, t3,
@@ -421,7 +421,8 @@ class AcidSpec extends SparkSpec {
     val mixed = Acid.snapshot(spark, t3)
     assert(rows(mixed) == rows(seed(20).filter($"k" =!= 1)))
     val mixedPlan = mixed.queryExecution.executedPlan.toString
-    // one merge branch (the p=1 side) unioned with a bypass branch
+    // the base rows of both partitions past the anti join, unioned with
+    // the aggregated delta events
     assert(mixedPlan.contains("max_by") && mixedPlan.contains("Union"))
   }
 
@@ -938,5 +939,246 @@ class AcidSpec extends SparkSpec {
     assert(Acid.pinnedPartition("k > 0", Seq("p")).isEmpty)
     assert(Acid.pinnedPartition("p = '3' or k > 0", Seq("p")).isEmpty)
     assert(Acid.pinnedPartition("p = k2", Seq("p")).isEmpty)
+  }
+
+  /** Reference resolution, without the anti join: every base row,
+    * original and delta event the census selects, in one union per
+    * leaf, the event with the highest currentTransaction winning per
+    * identity. One string per row: "leaf|originalTransaction|bucket|
+    * rowId|name=value,..." with the data columns sorted by name. */
+  private def fullUnionReference(t: String, asOf: Long): Set[String] = {
+    val root = new File(t)
+    val leaves = Acid.partitionLeaves(t) match {
+      case Seq() => Seq(root)
+      case ls    => ls
+    }
+    leaves.flatMap { leaf =>
+      val st = Acid.stateAsOf(leaf.toString, asOf)
+      val base = st.base.toSeq.map { case (_, dir) =>
+        val b = spark.read.parquet(dir.toString)
+        val data = b.columns.filterNot(
+          Set("originalTransaction", "bucket", "rowId"))
+        b.select(lit(Acid.InsertOp).as("operation"), $"originalTransaction",
+          $"bucket", $"rowId", $"originalTransaction".as("currentTransaction"),
+          struct(data.map(col): _*).as("row"))
+      }
+      // bucket = the file's index in its directory's sorted listing
+      val originals = st.originals.zipWithIndex.map { case (f, i) =>
+        val o = spark.read.parquet(f.toString)
+        o.select(lit(Acid.InsertOp).as("operation"),
+          lit(0L).as("originalTransaction"), lit(i).as("bucket"),
+          $"_metadata.row_index".as("rowId"),
+          lit(0L).as("currentTransaction"),
+          struct(o.columns.map(col): _*).as("row"))
+      }
+      val deltas = st.deltas.map(d => spark.read.parquet(d.dir.toString)
+        .select("operation", "originalTransaction", "bucket", "rowId",
+          "currentTransaction", "row"))
+      val rel = root.toPath.relativize(leaf.toPath).toString
+      (base ++ originals ++ deltas).reduceOption(_ unionByName _).toSeq
+        .flatMap { events =>
+          events.groupBy("originalTransaction", "bucket", "rowId")
+            .agg(max_by(struct($"operation", $"row"), $"currentTransaction")
+              .as("last"))
+            .filter($"last.operation" =!= Acid.DeleteOp)
+            .select($"originalTransaction", $"bucket", $"rowId", $"last.row")
+            .collect().map { r =>
+              val row = r.getStruct(3)
+              s"$rel|${r.get(0)}|${r.get(1)}|${r.get(2)}|" +
+                row.schema.fieldNames.sorted
+                  .map(c => s"$c=${row.getAs[Any](c)}").mkString(",")
+            }
+        }
+    }.toSet
+  }
+
+  /** `Acid.snapshotWithRowIdAsOf` in `fullUnionReference`'s format. */
+  private def snapshotStrings(t: String, asOf: Long): Set[String] = {
+    val partCols = Acid.partitionColsOf(t)
+    val snap = Acid.snapshotWithRowIdAsOf(spark, t, asOf)
+    val data = snap.columns
+      .filterNot(c => c == "row__id" || partCols.contains(c)).sorted
+    snap.collect().map { r =>
+      val leaf = partCols.map { c =>
+        s"$c=${Option(r.getAs[Any](c)).getOrElse("__HIVE_DEFAULT_PARTITION__")}"
+      }.mkString("/")
+      val id = r.getStruct(r.fieldIndex("row__id"))
+      s"$leaf|${id.get(0)}|${id.get(1)}|${id.get(2)}|" +
+        data.map(c => s"$c=${r.getAs[Any](c)}").mkString(",")
+    }.toSet
+  }
+
+  test("snapshot ≡ the full-union last-event-wins resolution on random " +
+    "histories, at every readable horizon") {
+    val rnd = new scala.util.Random(15)
+    Seq("plain", "adopted", "partitioned", "adopted-partitioned")
+      .foreach { kind =>
+        val t = tmpTable()
+        val partitioned = kind.endsWith("partitioned")
+        // p = k % 3, and the default (NULL) partition for k % 3 = 2
+        def rowsOf(ks: Seq[Long]): DataFrame = {
+          val df = ks.toDF("k").select($"k",
+            concat(lit("s"), $"k" % 3).as("s"), ($"k" * 1.5).as("v"))
+          if (partitioned)
+            df.withColumn("p", when($"k" % 3 =!= 2, ($"k" % 3).cast("int")))
+          else df
+        }
+        var nextK = 0L
+        def fresh(n: Int): Seq[Long] = {
+          val ks = nextK until nextK + n; nextK += n; ks
+        }
+        if (kind.startsWith("adopted")) {
+          val w = rowsOf(fresh(30)).repartition(3).write.mode("overwrite")
+          if (partitioned) w.partitionBy("p").parquet(t) else w.parquet(t)
+        } else {
+          Acid.create(t)
+          Acid.insertTxn(spark, t, rowsOf(fresh(30)),
+            if (partitioned) Seq("p") else Nil)
+        }
+        def check(asOf: Long, what: String): Unit = {
+          val want = scala.util.Try(fullUnionReference(t, asOf))
+          val got = scala.util.Try(snapshotStrings(t, asOf))
+          assert(got.toOption == want.toOption,
+            s"$kind after $what, as of $asOf: " +
+              s"extra=${(got.getOrElse(Set()) -- want.getOrElse(Set())).take(3)} " +
+              s"missing=${(want.getOrElse(Set()) -- got.getOrElse(Set())).take(3)}")
+        }
+        check(Long.MaxValue, "setup")
+        var lastUpdate = "k % 2 = 0"
+        // every kind of step once, three more at random, shuffled
+        val steps = rnd.shuffle((0 to 6) ++ Seq.fill(3)(rnd.nextInt(7)))
+        steps.foreach { step =>
+          val what = step match {
+            case 0 =>
+              Acid.insertTxn(spark, t, rowsOf(fresh(3 + rnd.nextInt(6))))
+              "insert"
+            case 1 =>
+              lastUpdate = s"k % ${2 + rnd.nextInt(3)} = 1"
+              Acid.updateTxn(spark, t, Map("v" -> "v + 1"), lastUpdate)
+              "update"
+            case 2 => // the same rows again: a second event per identity
+              Acid.updateTxn(spark, t, Map("s" -> "concat(s, 'u')"),
+                lastUpdate)
+              "re-update"
+            case 3 =>
+              Acid.deleteTxn(spark, t,
+                s"k % ${2 + rnd.nextInt(3)} = 0 AND k >= ${rnd.nextInt(20)}")
+              "delete"
+            case 4 => // the same key comes back under a new identity
+              val k = rnd.nextInt(nextK.toInt).toLong
+              Acid.deleteTxn(spark, t, s"k = $k")
+              Acid.insertTxn(spark, t, rowsOf(Seq(k)))
+              "delete-then-reinsert"
+            case 5 =>
+              Acid.compactMinor(spark, t)
+              "minor compaction"
+            case 6 =>
+              val leaves = Acid.partitionLeaves(t)
+              // a partitioned table may compact one leaf: clean leaves
+              // next to dirty ones
+              if (leaves.nonEmpty && rnd.nextBoolean())
+                Acid.compactMajor(spark,
+                  leaves(rnd.nextInt(leaves.size)).toString)
+              else Acid.compactMajor(spark, t)
+              "major compaction"
+          }
+          check(Long.MaxValue, what)
+          if (step >= 5) {
+            // horizons before the compaction read the old dirs until
+            // the Cleaner runs; after it they fail on both sides alike
+            check(Acid.nextWriteId(t) - 2, s"$what, uncleaned")
+            if (rnd.nextBoolean()) {
+              Acid.clean(t)
+              check(Long.MaxValue, s"$what + clean")
+            }
+          }
+        }
+        (0L until Acid.nextWriteId(t)).foreach(w => check(w, "history"))
+      }
+  }
+
+  test("a point read over a base and one delta shuffles only the " +
+    "delta's events") {
+    val t = tmpTable()
+    Acid.create(t)
+    Acid.insertTxn(spark, t, seed(2000))
+    Acid.compactMajor(spark, t)
+    Acid.clean(t)
+    Acid.updateTxn(spark, t, Map("v" -> "v + 1"), "k % 100 = 7")
+    val events = spark.read.parquet(s"$t/delta_0000002_0000002").count()
+    assert(events == 20)
+    val (_, shuffled) = jobsAndShuffleRecordsOf {
+      assert(Acid.snapshot(spark, t).filter($"k" === 107).select("v")
+        .as[Double].collect().toSeq == Seq(107 * 1.5 + 1))
+    }
+    // a merge of every version would shuffle the base's 2000 rows too
+    assert(shuffled <= events, s"$shuffled shuffle records for $events " +
+      "delta events")
+  }
+
+  test("a partition predicate reaches every scan's PartitionFilters " +
+    "when the partition has deltas") {
+    val t = tmpTable()
+    Acid.create(t)
+    Acid.insertTxn(spark, t,
+      seed(40).withColumn("p", ($"k" % 4).cast("int")), Seq("p"))
+    Acid.compactMajor(spark, t)
+    Acid.clean(t)
+    Acid.updateTxn(spark, t, Map("v" -> "v * 2"), "p = 2 AND k < 20")
+    Acid.deleteTxn(spark, t, "k = 1")
+    val pruned = Acid.snapshot(spark, t).filter($"p" === 2)
+    val scans = pruned.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    // the base, the deltas' named identities and the delta events; a
+    // delta read scans once per stored schema
+    assert(scans.size >= 3, pruned.queryExecution.sparkPlan.toString)
+    scans.foreach { s =>
+      assert(s.partitionFilters.exists(_.references.exists(_.name == "p")),
+        s"scan without a partition filter:\n$s")
+    }
+    assert(rows(pruned) == rows(seed(40).filter($"k" % 4 === 2)
+      .withColumn("v", when($"k" < 20, $"v" * 2).otherwise($"v"))))
+  }
+
+  test("MERGE reads the snapshot and the source once: a NOT MATCHED " +
+    "clause adds no job") {
+    val src = Seq((2L, "keep", 100.0), (42L, "new", 7.0))
+      .toDF("sk", "ss", "sv")
+    def merge(withInsert: Boolean): Int = {
+      val t = tmpTable()
+      Acid.create(t)
+      Acid.insertTxn(spark, t, seed(10))
+      Acid.deleteTxn(spark, t, "k = 5")
+      jobsOf {
+        Acid.mergeTxn(spark, t, src, "s", "t", "t.k = s.sk",
+          matched = Seq(Warehouse.MatchedUpdate(None, Map("v" -> "s.sv"))),
+          notMatched = if (!withInsert) None
+            else Some(Warehouse.NotMatchedInsert(None,
+              Seq("s.sk", "s.ss", "s.sv"))))
+      }
+    }
+    val (without, withInsert) = (merge(false), merge(true))
+    assert(withInsert <= without,
+      s"MERGE with inserts ran $withInsert jobs, without $without")
+  }
+
+  test("MERGE INSERT VALUES may name a source column that shares its " +
+    "name with a target column, unqualified") {
+    val t = tmpTable()
+    Acid.create(t)
+    Acid.insertTxn(spark, t, seed(5))
+    Acid.register(spark, "acid_merge_unq", t)
+    Seq((1L, "a", 10.0), (7L, "b", 20.0), (8L, "c", -1.0))
+      .toDF("k", "s", "v").createOrReplaceTempView("acid_merge_unq_src")
+    GraftSession.sql(spark, """
+      MERGE INTO acid_merge_unq AS t USING acid_merge_unq_src AS src
+      ON t.k = src.k
+      WHEN MATCHED THEN UPDATE SET v = src.v
+      WHEN NOT MATCHED AND v > 0 THEN INSERT VALUES (k, s, v)""")
+    assert(rows(spark.table("acid_merge_unq")) == rows(seed(5)
+      .withColumn("v", when($"k" === 1, 10.0).otherwise($"v"))) +
+      ((7L, "b", 20.0)))
+    Acid.deregister(spark, "acid_merge_unq")
   }
 }

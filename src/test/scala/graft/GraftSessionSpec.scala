@@ -5,6 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** GraftSession bootstrap: a reference user's one-call entry point. */
 class GraftSessionSpec extends SparkSpec {
 
+  test("the builder's session runs on 1 MiB Tungsten pages") {
+    // Spark derives the page from the heap (64 MiB in an 8 GB JVM), and
+    // every broadcast hash relation holds at least one page
+    spark.range(1).collect()
+    assert(org.apache.spark.SpecBridge.pageSizeBytes == (1L << 20))
+  }
+
   test("local() yields a session with functions, confs, and SQL surface") {
     val shared = spark
     SparkSession.clearActiveSession()

@@ -457,6 +457,29 @@ class JoinPropertySpec extends SparkSpec {
 
   private val rnd = new scala.util.Random(4242)
 
+  test("ACID insert identities ≡ row_number over the bucket, no shuffle") {
+    import org.apache.spark.sql.expressions.Window
+    (0 until 5).foreach { trial =>
+      val n = rnd.nextInt(400)
+      val parts = 1 + rnd.nextInt(6)
+      // hash-partitioned on a small modulus: uneven buckets, some empty
+      val input = spark.range(n)
+        .repartition(parts, col("id") % (1 + rnd.nextInt(5)))
+        .withColumn("seq", monotonically_increasing_id())
+      val events = Acid.asInsertEvents(input, 1L)
+      assert(!events.queryExecution.executedPlan.toString
+        .contains("Window"), "identity assignment planned a window")
+      val got = events
+        .withColumn("ref", row_number().over(Window.partitionBy("bucket")
+          .orderBy(col("row.seq"))).cast("long") - 1)
+        .select("bucket", "rowId", "ref").as[(Int, Long, Long)].collect()
+      assert(got.length == n, s"trial $trial")
+      assert(got.forall { case (_, id, ref) => id == ref },
+        s"trial $trial: ${got.filter(r => r._2 != r._3).take(5).toSeq}")
+      assert(got.map(r => (r._1, r._2)).distinct.length == n)
+    }
+  }
+
   test("AsOfJoin.backward ≡ per-row argmax over rightTs <= leftTs") {
     val facts = Seq.tabulate(300)(i =>
       (i.toLong, "k" + rnd.nextInt(8), rnd.nextInt(50).toLong))

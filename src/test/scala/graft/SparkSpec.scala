@@ -12,15 +12,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Spark jobs `f` launches on this thread's job group, counted after
     * the listener bus has delivered every event. */
-  protected def jobsOf(f: => Unit): Int = {
+  protected def jobsOf(f: => Unit): Int = jobsAndShuffleRecordsOf(f)._1
+
+  /** As `jobsOf`, plus the shuffle records the tasks of those jobs
+    * wrote. */
+  protected def jobsAndShuffleRecordsOf(f: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
     val group = s"spec-jobs-${java.util.UUID.randomUUID()}"
     val n = new java.util.concurrent.atomic.AtomicInteger
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(
-          _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+          _.getProperty("spark.jobGroup.id") == group)) {
+          n.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(
+            e.taskMetrics.shuffleWriteMetrics.recordsWritten)
     }
     org.apache.spark.SpecBridge.drainListeners(sc)
     sc.addSparkListener(l)
@@ -28,7 +42,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       f
       org.apache.spark.SpecBridge.drainListeners(sc)
-      n.get
+      (n.get, records.get)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(l)
